@@ -11,9 +11,15 @@ object Lineage {
 
   /** Truncate plan lineage between iterative rounds: reliable
     * checkpoint when a checkpoint dir is configured (the cluster
-    * setting — survives executor loss), local checkpoint otherwise.
-    * Both are EAGER (run a job), so callers only invoke this every
-    * k rounds, not per round. */
+    * setting — survives executor loss), otherwise a local leaf that
+    * stores each partition as a few packed ~1 MB pages of `UnsafeRow`
+    * bytes in MEMORY_AND_DISK (about the frame's row bytes, not one JVM
+    * object per row; layout in
+    * [[org.apache.spark.sql.graftbridge.DatasetBridge]]). The local
+    * leaf is read through one reused row per task, pointed at each
+    * stored row in place; its scan projects every row, so plans over
+    * it never see the reuse. Both are EAGER (run one job), so callers
+    * only invoke this every k rounds, not per round. */
   def truncate(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     // partitioning-preserving local leaf (localCheckpoint under AQE

@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.DatasetBridge
 
 /** Session-scoped memo of shared intermediate frames, each cut to a
   * [[Lineage.truncate]] checkpoint leaf.
@@ -18,6 +19,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `cacheManager.clearCache()` (which drops Catalyst plan-cache entries
   * but not checkpointed RDD blocks — the property Bench/Verify rely on
   * between queries).
+  *
+  * A leaf holds its rows as packed pages of `UnsafeRow` bytes, about
+  * its row bytes in storage for the whole session, and any number of
+  * consumers may read it at once: each task walks the shared read-only
+  * pages with its own reused row (see
+  * [[org.apache.spark.sql.graftbridge.DatasetBridge]]).
   *
   * Contract: the builder must be DETERMINISTIC (every graft query is —
   * the driver hash-compares against DuckDB), so first-build vs reuse
@@ -68,9 +75,10 @@ object SharedFrames {
       val prev = memo.putIfAbsent(k, built)
       if (prev != null) {
         // racing first-consumers: the loser's eagerly built leaf is
-        // discarded — unpersist its cached blocks (best-effort) so the
+        // discarded — drop its stored pages (best-effort) so the
         // duplicate build doesn't leak storage for the session lifetime
-        try built.unpersist() catch { case _: Throwable => () }
+        // (`Dataset.unpersist` would only touch CacheManager entries)
+        try DatasetBridge.release(built) catch { case _: Throwable => () }
         prev
       } else built
     }

@@ -19,8 +19,11 @@ object Tables {
   val SmallDims: Set[String] = Set("region", "nation", "customer", "supplier", "part")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // events.ts is TIMESTAMP(NANOS) parquet, which Spark's TimestampType
-    // (µs) refuses outright. Read nanos as raw longs and truncate to µs
+    // The testdata (TESTDATA.md) stores events.ts as TIMESTAMP(MICROS),
+    // not adjusted to UTC, at sf0.001, sf0.01 and sf0.1: the NTZ branch
+    // below. A writer that emits TIMESTAMP(NANOS) parquet instead (e.g.
+    // pandas/pyarrow defaults) would be refused outright by Spark's µs
+    // TimestampType, so nanos are read as raw longs and truncated to µs
     // here — integer `div`, not double division: ns-since-epoch ≈ 1.7e18
     // exceeds a double's 2^53 exact-integer range.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import graft.core.JobSettings
 import graft.operators.MergeOps
 
@@ -17,8 +18,15 @@ import graft.operators.MergeOps
   * writer per table path. Real formats get optimistic concurrency from
   * their commit protocol.)
   *
-  * Batch emptiness is checked with `isEmpty` (one partition probe), not
-  * the reference's `df.count()` which recomputes the whole batch.
+  * Each micro-batch's plan runs ONCE: the batch is cut to a leaf
+  * ([[DatasetBridge]]) whose one building job also counts it, an empty
+  * batch stops there, the MERGE reads the leaf and the leaf is released
+  * after it. Probing with `isEmpty` first instead runs a stateful gold
+  * batch twice — once for the probe, once for the MERGE — and its state
+  * operator then counts every updated row twice. A leaf, not
+  * `persist()`: `count()` on a cached frame is two jobs under AQE, and
+  * every plan over a cached frame carries the whole stateful plan in
+  * its SQL UI graph, which the session retains.
   *
   * @param tablePath   parquet/Delta: a filesystem path; Iceberg: a
   *                    catalog table identifier
@@ -63,11 +71,13 @@ class ParquetUpsertSink(spark: SparkSession, tablePath: String, keys: Seq[String
     * lose" contract). Counter columns are OVERWRITTEN, not incremented —
     * replay-safe under update-mode re-emission (reference T4 contract). */
   def merge(batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
-    tableFormat match {
-      case "delta" | "iceberg" => mergeInto(batch, batchId)
-      case _                   => mergeParquetSwap(batch, batchId)
-    }
+    val (rows, n) = DatasetBridge.materializeCounted(batch)
+    try {
+      if (n > 0) tableFormat match {
+        case "delta" | "iceberg" => mergeInto(rows, batchId)
+        case _                   => mergeParquetSwap(rows, batchId)
+      }
+    } finally DatasetBridge.release(rows)
   }
 
   /** Real row-level MERGE: pre-dedup the batch latest-per-key, then one
@@ -101,9 +111,15 @@ class ParquetUpsertSink(spark: SparkSession, tablePath: String, keys: Seq[String
     val dest = new Path(tablePath)
     graft.core.AtomicSwap.recoverParked(fs, dest, "__old_")
     val ordAsc = orderBy.map(col)
+    // the stored snapshot was written from earlier batches of the same
+    // schema: read it with that schema (no parquet footer inference
+    // job). It is read on the sink's session, not the batch's: the
+    // streaming clone runs with AQE off, and the rewrite would then
+    // write one small file per shuffle partition.
     val merged =
       if (!exists) MergeOps.dedupLatestBy(batch, keys, ordAsc)
-      else MergeOps.dedupLatestBy(read().unionByName(batch.select(read().columns.map(col).toSeq: _*)), keys, ordAsc)
+      else MergeOps.dedupLatestBy(
+        spark.read.schema(batch.schema).parquet(tablePath).unionByName(batch), keys, ordAsc)
     graft.core.AtomicSwap.swap(fs, dest,
       tmp = new Path(tablePath + s"__tmp_$batchId"),
       old = new Path(tablePath + s"__old_$batchId")) { tmp =>

@@ -1,24 +1,46 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.AttributeSet
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeSet, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.Platform
 
-/** Single-job materialize (+ count) for iterative operators.
+/** Single-job materialize (+ count) for iterative operators and shared
+  * frames: the engine's one way to cut a frame into a leaf.
   *
   * A BFS-style loop needs two things at the end of every round:
   * lineage truncation (or round N's plan nests N joins) and a
   * saturation probe (is the frontier empty?). `localCheckpoint()`
   * then `isEmpty` pays TWO job submissions per round; at local-mode
   * driver-loop grain that fixed overhead dominates small-SF graph
-  * queries. Here the frame is materialized once into a persisted
-  * InternalRow RDD whose `count()` IS the materializing job and
-  * returns the probe answer; the returned frame is an RDD-backed
-  * leaf, so lineage is truncated exactly as a localCheckpoint would.
+  * queries. Here the frame is materialized once into a persisted,
+  * locally checkpointed RDD whose materializing job also returns the
+  * row count; the returned frame is an RDD-backed leaf, so lineage is
+  * truncated exactly as a localCheckpoint would.
+  *
+  * STORAGE: each partition is stored as a few contiguous `byte[]`
+  * PAGES of about [[PageBytes]], not as one `UnsafeRow` object plus one
+  * `byte[]` per row (about 56 B of JVM headers and fields on top of
+  * 24-44 B of row data for the typical narrow leaf). A page is
+  * `[int rows][int len₁][row₁ bytes][int len₂][row₂ bytes]…`: each row's
+  * `UnsafeRow` bytes (`writeToMemory`) behind its 4-byte length. A row
+  * too large for a page gets a page of its own; a row that is not an
+  * `UnsafeRow` goes through an `UnsafeProjection` first. Pages are
+  * exactly sized, so a leaf holds about its row bytes in the block
+  * manager (MEMORY_AND_DISK), and the GC sees a few large arrays
+  * instead of millions of small objects.
+  *
+  * ROW REUSE: the leaf reads each page through an iterator that points
+  * ONE reused `UnsafeRow` at each stored row in place — the contract a
+  * parquet scan gives. `RDDScanExec` projects every row it reads, so
+  * no plan over the leaf sees the reused row; code that takes the
+  * leaf's RDD directly must copy a row it keeps.
   *
   * PARTITIONING: the leaf carries the executed plan's FINAL output
   * partitioning (unwrapping AdaptiveSparkPlanExec — whose own
@@ -30,12 +52,98 @@ import org.apache.spark.storage.StorageLevel
   * partitioning is kept only when its expressions are a subset of the
   * leaf's output (else claiming it would be unsound) and LogicalRDD
   * rewrites it consistently on newInstance(), so self-joins stay safe.
+  * Packing keeps each partition's row order, so the plan's ordering
+  * holds too.
   *
   * Lives in the org.apache.spark.sql namespace because
   * `Dataset.ofRows` / `LogicalRDD` are `private[sql]` (same
   * one-file-shim practice as [[ColumnBridge]]).
   */
 object DatasetBridge {
+
+  /** Target size of one stored page (a larger row gets its own page). */
+  val PageBytes: Int = 1 << 20
+
+  // page header: row count; then per row its length and UnsafeRow bytes
+  private val HeaderBytes = 4
+  private val LenBytes = 4
+
+  private def rowsIn(page: Array[Byte]): Int = Platform.getInt(page, Platform.BYTE_ARRAY_OFFSET)
+
+  private def put(page: Array[Byte], pos: Int, row: UnsafeRow): Unit = {
+    Platform.putInt(page, Platform.BYTE_ARRAY_OFFSET + pos, row.getSizeInBytes)
+    row.writeToMemory(page, Platform.BYTE_ARRAY_OFFSET + pos + LenBytes)
+  }
+
+  /** Pack one partition's rows (of column types `types`) into pages.
+    * The upstream iterator may reuse its row object: each row is
+    * written out before the next one is pulled. */
+  def pack(rows: Iterator[InternalRow], types: Array[DataType]): Iterator[Array[Byte]] =
+    new Iterator[Array[Byte]] {
+      private lazy val buf = new Array[Byte](PageBytes)
+      private lazy val toUnsafe = UnsafeProjection.create(types)
+      // the row that did not fit the page just emitted; still valid,
+      // since `rows` has not been advanced past it
+      private var pending: UnsafeRow = null
+
+      private def pull(): UnsafeRow = rows.next() match {
+        case u: UnsafeRow => u
+        case other => toUnsafe(other)
+      }
+
+      def hasNext: Boolean = pending != null || rows.hasNext
+
+      def next(): Array[Byte] = {
+        if (!hasNext) throw new NoSuchElementException("no page left")
+        var pos = HeaderBytes
+        var n = 0
+        var full = false
+        while (!full && hasNext) {
+          val row = if (pending != null) pending else pull()
+          pending = null
+          val need = LenBytes + row.getSizeInBytes
+          if (pos + need <= PageBytes) {
+            put(buf, pos, row); pos += need; n += 1
+          } else if (n == 0) {
+            val own = new Array[Byte](HeaderBytes + need)
+            put(own, HeaderBytes, row)
+            Platform.putInt(own, Platform.BYTE_ARRAY_OFFSET, 1)
+            return own
+          } else {
+            pending = row; full = true
+          }
+        }
+        val page = java.util.Arrays.copyOf(buf, pos)
+        Platform.putInt(page, Platform.BYTE_ARRAY_OFFSET, n)
+        page
+      }
+    }
+
+  /** Read pages back as rows: ONE reused `UnsafeRow` of `numFields`
+    * fields, pointed at each stored row in place. */
+  def unpack(pages: Iterator[Array[Byte]], numFields: Int): Iterator[InternalRow] =
+    new Iterator[InternalRow] {
+      private val row = new UnsafeRow(numFields)
+      private var page: Array[Byte] = null
+      private var left = 0
+      private var pos = 0
+
+      def hasNext: Boolean = {
+        while (left == 0 && pages.hasNext) {
+          page = pages.next(); left = rowsIn(page); pos = HeaderBytes
+        }
+        left > 0
+      }
+
+      def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException("no row left")
+        val size = Platform.getInt(page, Platform.BYTE_ARRAY_OFFSET + pos)
+        row.pointTo(page, Platform.BYTE_ARRAY_OFFSET + pos + LenBytes, size)
+        pos += LenBytes + size
+        left -= 1
+        row
+      }
+    }
 
   @scala.annotation.tailrec
   private def unwrapAqe(p: SparkPlan): SparkPlan = p match {
@@ -49,30 +157,32 @@ object DatasetBridge {
     case other => other
   }
 
-  /** Materialize `df` into a persisted leaf that keeps the executed
-    * plan's final partitioning/ordering. One job (the count). */
+  /** Materialize `df` into a persisted leaf of packed pages that keeps
+    * the executed plan's final partitioning/ordering. One job, whose
+    * result is the row count. */
   def materializeCounted(df: DataFrame): (DataFrame, Long) = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val spark = ds.sparkSession
-    // copy(): the scan reuses UnsafeRow buffers; caching without a copy
-    // would alias every row in a partition to the last one.
+    val output = ds.logicalPlan.output
+    val types = output.map(_.dataType).toArray
     // localCheckpoint (not a bare persist): truncates the RDD lineage
     // at materialization — without it every later task referencing the
     // leaf serializes the ENTIRE accumulated upstream RDD DAG into its
     // task binary (measured: 60 s of pure task deserialization on the
     // diameter double sweep once loop leaves chained).
-    val rdd = ds.queryExecution.toRdd.map(_.copy())
-    rdd.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
-    val n = rdd.count()
+    val pages = ds.queryExecution.toRdd.mapPartitions(rows => pack(rows, types))
+    pages.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
+    val n = spark.sparkContext.runJob(pages,
+      (it: Iterator[Array[Byte]]) => it.map(rowsIn(_).toLong).sum).sum
     // read the FINAL plan only after the materializing job: AQE's
     // executedPlan is not final until the query has run
     val phys = unwrapAqe(ds.queryExecution.executedPlan)
-    val output = ds.logicalPlan.output
     val outSet = AttributeSet(output)
+    val numPartitions = pages.getNumPartitions
     val partitioning = firstLeafPartitioning(phys.outputPartitioning) match {
       case p: org.apache.spark.sql.catalyst.expressions.Expression with Partitioning
-        if p.numPartitions == rdd.getNumPartitions && p.references.subsetOf(outSet) => p
-      case _ => UnknownPartitioning(rdd.getNumPartitions)
+        if p.numPartitions == numPartitions && p.references.subsetOf(outSet) => p
+      case _ => UnknownPartitioning(numPartitions)
     }
     val ordering =
       if (phys.outputOrdering.forall(_.references.subsetOf(outSet))) phys.outputOrdering
@@ -86,7 +196,9 @@ object DatasetBridge {
       .EstimationUtils.getSizePerRow(output)
     val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
       sizeInBytes = (sizePerRow * n).max(1), rowCount = Some(n))
-    val leaf = LogicalRDD(output, rdd, partitioning, ordering, isStreaming = false)(
+    val numFields = output.size
+    val rows = pages.mapPartitions(it => unpack(it, numFields), preservesPartitioning = true)
+    val leaf = LogicalRDD(output, rows, partitioning, ordering, isStreaming = false)(
       spark, Some(stats), None).newInstance()
     (classic.Dataset.ofRows(spark, leaf), n)
   }
@@ -95,4 +207,14 @@ object DatasetBridge {
     * partitioning-preserving replacement for `localCheckpoint()` in
     * Lineage.truncate's local path. */
   def materialize(df: DataFrame): DataFrame = materializeCounted(df)._1
+
+  /** Free a leaf built by [[materializeCounted]]: drop its stored
+    * pages, waiting until the blocks are gone. `Dataset.unpersist`
+    * cannot do this — it only drops CacheManager entries, and a leaf
+    * is not one. The leaf is unreadable afterwards; a frame that is
+    * not an RDD-backed leaf is left alone. */
+  def release(leaf: DataFrame): Unit = leaf.asInstanceOf[classic.Dataset[Row]].logicalPlan match {
+    case r: LogicalRDD => r.rdd.dependencies.foreach(_.rdd.unpersist(blocking = true))
+    case _ => ()
+  }
 }

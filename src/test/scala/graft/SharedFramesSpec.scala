@@ -50,4 +50,22 @@ class SharedFramesSpec extends AnyFunSuite {
     }
     assert(innerBuilds == 1, "inner leaf must be memoized from the nested build")
   }
+
+  test("a racing first consumer's losing leaf is released from storage") {
+    def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val before = stored
+    var winner: org.apache.spark.sql.DataFrame = null
+    val got = SharedFrames.memoize(spark, "sfspec:race") {
+      // another first consumer of the key finishes its build first
+      // (here re-entrantly), so this build loses the putIfAbsent
+      winner = SharedFrames.memoize(spark, "sfspec:race")(Seq(1L, 2L).toDF("x"))
+      Seq(1L, 2L).toDF("x")
+    }
+    assert(got eq winner)
+    val winnerPages = winner.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.dependencies.head.rdd.id
+    }.get
+    assert(stored -- before == Set(winnerPages), "the losing leaf still holds storage")
+    assert(got.as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
 }

@@ -334,4 +334,35 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.toSeq == Seq(2L)) // overwrite => 2, increment bug would give 3
     q.stop()
   }
+
+  test("MERGE sink runs each gold micro-batch's stateful plan once") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val events = MemoryStream[String]
+    val dir = Files.createTempDirectory("graft_stream_once").toString
+    val sink = new ParquetUpsertSink(spark, s"$dir/gold",
+      keys = Seq("user_id", "window_start"), orderBy = Seq("processed_at"))
+    val q = EventPipeline.goldAggregate(
+        EventPipeline.annotate(EventPipeline.parse(raw(events))), watermark = "10 minutes")
+      .writeStream
+      .foreachBatch(sink.foreachBatchFn)
+      .option("checkpointLocation", s"$dir/ckpt")
+      .outputMode("update")
+      .start()
+    // three events in two (user, minute) groups: the batch emits 2 rows
+    events.addData(
+      json("c1", "2024-01-01T00:00:05Z"),
+      json("c2", "2024-01-01T00:00:20Z", typ = "click"),
+      json("c3", "2024-01-01T00:01:10Z", user = "u2"))
+    q.processAllAvailable()
+    val merged = sink.read().count()
+    val data = q.recentProgress.filter(_.numInputRows > 0)
+    q.stop()
+    assert(merged == 2L)
+    assert(data.length == 1)
+    // a second run of the batch plan (an emptiness probe before the
+    // MERGE) updates every group's state again and doubles this count
+    val updated = data.head.stateOperators.filter(_.operatorName == "stateStoreSave").map(_.numRowsUpdated)
+    assert(updated.toSeq == Seq(merged), s"aggregation updated ${updated.mkString(",")} state rows for $merged merged rows")
+  }
 }
