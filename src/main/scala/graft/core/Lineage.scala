@@ -12,9 +12,10 @@ object Lineage {
   /** Truncate plan lineage between iterative rounds: reliable
     * checkpoint when a checkpoint dir is configured (the cluster
     * setting — survives executor loss), otherwise a local leaf that
-    * stores each partition as a few packed ~1 MB pages of `UnsafeRow`
-    * bytes in MEMORY_AND_DISK (about the frame's row bytes, not one JVM
-    * object per row; layout in
+    * stores each partition as packed pages of `UnsafeRow` bytes of at
+    * most 512 KiB each, under G1's humongous-object size, in
+    * MEMORY_AND_DISK (about the frame's row bytes of heap, not one JVM
+    * object per row, nor whole G1 regions per page; layout in
     * [[org.apache.spark.sql.graftbridge.DatasetBridge]]). The local
     * leaf is read through one reused row per task, pointed at each
     * stored row in place; its scan projects every row, so plans over
@@ -33,10 +34,15 @@ object Lineage {
     * (the DatasetBridge leaf carries the executed plan's partitioning
     * and ordering — localCheckpoint under AQE loses them), so every
     * round's equi-join on the key consumes the frame co-partitioned
-    * and pre-sorted: shuffled once here, sorted once here, and never
+    * and pre-sorted: shuffled once here, sorted once here, and not
     * moved or re-sorted again — whether the round's join is planned
     * broadcast (small counterpart) or sort-merge (100 TB counterpart)
-    * (guide §2.4 "remove shuffles outright"). Partition COUNT stays
+    * (guide §2.4 "remove shuffles outright"). That holds only while AQE
+    * leaves the leaf's shuffle uncoalesced: a coalesced leaf carries
+    * `CoalescedHashPartitioning`, which Spark's `EnsureRequirements`
+    * cannot match against another coalesced side, so a sort-merge join
+    * on the key (a self-join of the leaf included) shuffles both sides
+    * again. Partition COUNT stays
     * AQE's byte-coalesced choice: a width pinned to the shuffle
     * parallelism was measured to double-to-triple total task CPU at
     * sf0.1 (per-task fixed costs on near-empty partitions) with no

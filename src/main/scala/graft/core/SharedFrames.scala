@@ -20,8 +20,11 @@ import org.apache.spark.sql.graftbridge.DatasetBridge
   * but not checkpointed RDD blocks — the property Bench/Verify rely on
   * between queries).
   *
-  * A leaf holds its rows as packed pages of `UnsafeRow` bytes, about
-  * its row bytes in storage for the whole session, and any number of
+  * A leaf holds its rows as packed pages of `UnsafeRow` bytes, each
+  * under G1's humongous-object size, so it takes about its row bytes
+  * of heap for the whole session (the block manager's storage figures
+  * count array lengths and cannot show heap lost to G1 regions), and
+  * any number of
   * consumers may read it at once: each task walks the shared read-only
   * pages with its own reused row (see
   * [[org.apache.spark.sql.graftbridge.DatasetBridge]]).

@@ -25,16 +25,29 @@ import org.apache.spark.unsafe.Platform
   * truncated exactly as a localCheckpoint would.
   *
   * STORAGE: each partition is stored as a few contiguous `byte[]`
-  * PAGES of about [[PageBytes]], not as one `UnsafeRow` object plus one
-  * `byte[]` per row (about 56 B of JVM headers and fields on top of
+  * PAGES of at most [[PageBytes]], not as one `UnsafeRow` object plus
+  * one `byte[]` per row (about 56 B of JVM headers and fields on top of
   * 24-44 B of row data for the typical narrow leaf). A page is
   * `[int rows][int len₁][row₁ bytes][int len₂][row₂ bytes]…`: each row's
   * `UnsafeRow` bytes (`writeToMemory`) behind its 4-byte length. A row
   * too large for a page gets a page of its own; a row that is not an
   * `UnsafeRow` goes through an `UnsafeProjection` first. Pages are
-  * exactly sized, so a leaf holds about its row bytes in the block
-  * manager (MEMORY_AND_DISK), and the GC sees a few large arrays
-  * instead of millions of small objects.
+  * exactly sized and persisted MEMORY_AND_DISK, and the GC sees a few
+  * large arrays instead of millions of small objects.
+  *
+  * PAGE SIZE: a page object (16 B array header plus its bytes), like
+  * `pack`'s scratch buffer, is at most 512 KiB: half of G1's smallest
+  * region (1 MiB), so it is never a HUMONGOUS object at any heap size,
+  * and four full pages fill a 2 MiB region. G1 gives an object larger
+  * than half a region whole regions of its own: with 2 MiB regions
+  * (`-Xmx3g`), 128 `byte[1_048_576]` retain 256.1 MB of heap, while 128
+  * `byte[1_048_560]` retain 128.1 MB. Pages of 1 MiB payload were
+  * humongous whenever a full page left under 16 B of slack, as it did
+  * for every narrow leaf of `q_pagerank` (entries of 20-44 B), so such
+  * a leaf took about twice its row bytes of heap. Spark's storage
+  * accounting cannot see that waste: `SizeEstimator`, the block manager
+  * and `getRDDStorageInfo` count array lengths, not regions, so a
+  * footprint change must be checked on the heap itself.
   *
   * ROW REUSE: the leaf reads each page through an iterator that points
   * ONE reused `UnsafeRow` at each stored row in place — the contract a
@@ -61,8 +74,10 @@ import org.apache.spark.unsafe.Platform
   */
 object DatasetBridge {
 
-  /** Target size of one stored page (a larger row gets its own page). */
-  val PageBytes: Int = 1 << 20
+  /** Largest stored page, in bytes (a larger row gets a page of its
+    * own): with its 16-byte array header a page object is 512 KiB,
+    * half of G1's smallest region, so it is never humongous. */
+  val PageBytes: Int = (1 << 19) - 16
 
   // page header: row count; then per row its length and UnsafeRow bytes
   private val HeaderBytes = 4

@@ -1,15 +1,18 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
+import com.sun.management.HotSpotDiagnosticMXBean
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeRow}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Lineage
@@ -79,6 +82,39 @@ class DatasetBridgeSpec extends AnyFunSuite {
       Iterator(DatasetBridge.pack(it, Array(LongType, StringType)).map(_.length).toList)
     }.collect().head
     assert(rows.size == 3 && rows(1) > DatasetBridge.PageBytes, s"page sizes $rows")
+  }
+
+  // a byte[] object is its 16-byte header plus its bytes; G1 makes an
+  // object larger than half a region humongous, and its smallest region
+  // is 1 MiB
+  private val ArrayHeader = 16
+  private val HalfSmallestRegion = 512 * 1024
+
+  test("pages stay under G1's humongous size, whatever the row width") {
+    val rows = 200000
+    // 1 to 4 long columns: entries of 20, 28, 36 and 44 B
+    for (width <- 1 to 4) {
+      val types: Array[DataType] = Array.fill(width)(LongType)
+      val in = Iterator.tabulate(rows)(i => new GenericInternalRow(Array.fill[Any](width)(i.toLong)))
+      val pages = DatasetBridge.pack(in, types).toList
+      val counts = pages.map(p => Platform.getInt(p, Platform.BYTE_ARRAY_OFFSET))
+      assert(counts.sum == rows)
+      assert(pages.size > 1, s"$width columns: one page holds all $rows rows")
+      pages.zip(counts).foreach { case (page, n) =>
+        val oversizedRow = n == 1 && page.length > DatasetBridge.PageBytes
+        assert(oversizedRow || ArrayHeader + page.length <= HalfSmallestRegion,
+          s"$width columns: a page of ${page.length} B holding $n rows is humongous")
+      }
+    }
+  }
+
+  test("a full page is not humongous in the JVM running this test") {
+    val hotspot = ManagementFactory.getPlatformMXBean(classOf[HotSpotDiagnosticMXBean])
+    if (hotspot.getVMOption("UseG1GC").getValue != "true")
+      cancel("the collector is not G1; humongous objects are a G1 notion")
+    val regionBytes = hotspot.getVMOption("G1HeapRegionSize").getValue.toLong
+    assert(ArrayHeader + DatasetBridge.PageBytes <= regionBytes / 2,
+      s"a full page of ${DatasetBridge.PageBytes} B is humongous in G1 regions of $regionBytes B")
   }
 
   test("an empty frame and empty partitions count 0 and read back") {
