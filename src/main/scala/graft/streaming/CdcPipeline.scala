@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.operators.Validation
+import graft.plans.OutOfCodegen
 
 /** CDC → Type-1 dim snapshot job (reference rt_video_cdc_upsert.py):
   * Debezium-ish envelope `{op, ts_ms, schema_version, after{...}}` →
@@ -37,7 +38,7 @@ object CdcPipeline {
       .withColumn("region", col("cdc.after.region"))
       .withColumn("upload_time", try_to_timestamp(col("cdc.after.upload_time")))
       .withColumn("status", col("cdc.after.status"))
-      .withColumn("ingested_at", current_timestamp())
+      .withColumn("ingested_at", OutOfCodegen.currentTimestamp)
 
   /** Error precedence (reference rt_video_cdc_upsert.py:157-165). */
   def validationRules: Seq[Validation.Rule] = Seq(
@@ -63,7 +64,7 @@ object CdcPipeline {
     annotated.filter(col("error_code").isNull).select(
       col("video_id"), col("category"), col("region"), col("upload_time"),
       col("status"), col("ts_ms"), col("source_offset"),
-      current_timestamp().as("updated_at"))
+      OutOfCodegen.currentTimestamp.as("updated_at"))
 
   /** Start quarantine append + dim MERGE sinks. The dim sink dedups each
     * micro-batch by video_id (ts_ms DESC, source_offset DESC) then

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.Validation
+import graft.plans.OutOfCodegen
 
 /** Structured-Streaming re-expression of the reference's realtime jobs
   * (rt_content_events_aggregator.py): JSON envelope parse → lineage
@@ -49,7 +50,7 @@ object EventPipeline {
       .withColumn("payload_json", col("event.payload_json"))
       .withColumn("watch_time_ms",
         get_json_object(col("payload_json"), "$.watch_time_ms").cast("long"))
-      .withColumn("ingested_at", current_timestamp())
+      .withColumn("ingested_at", OutOfCodegen.currentTimestamp)
 
   /** Error-code precedence ladder (reference 5-level contract:
     * PARSE > MISSING_FIELD > INVALID_TIMESTAMP > INVALID_TYPE > INVALID_PAYLOAD). */
@@ -129,7 +130,7 @@ object EventPipeline {
         col("window.end").as("window_end"),
         col("user_id"), col("views"), col("clicks"), col("purchases"),
         col("signups"), col("errors"), col("watch_time_sum_ms"),
-        current_timestamp().as("processed_at"))
+        OutOfCodegen.currentTimestamp.as("processed_at"))
   }
 
   /** Stream→static dim enrichment — the reference's own join shape

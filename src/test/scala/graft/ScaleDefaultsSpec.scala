@@ -17,6 +17,9 @@ class ScaleDefaultsSpec extends AnyFunSuite {
     assert(m("spark.sql.optimizer.runtime.bloomFilter.enabled") == "true")
     assert(m("spark.sql.shuffle.partitions") == "32")
     assert(m("spark.sql.session.timeZone") == "UTC")
+    assert(m("spark.hadoop.fs.file.impl") == classOf[graft.core.NoForkLocalFileSystem].getName)
+    assert(m("spark.hadoop.fs.AbstractFileSystem.file.impl") == classOf[graft.core.NoForkLocalFs].getName)
+    assert(m("spark.sql.codegen.cache.maxEntries") == "1000")
   }
 
   test("runtime bloom filter injects might_contain on a selective non-broadcast join") {

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{DropRatioListener, EventPipeline, ParquetUpsertSink}
@@ -364,5 +365,50 @@ class StreamingSpec extends AnyFunSuite {
     // MERGE) updates every group's state again and doubles this count
     val updated = data.head.stateOperators.filter(_.operatorName == "stateStoreSave").map(_.numRowsUpdated)
     assert(updated.toSeq == Seq(merged), s"aggregation updated ${updated.mkString(",")} state rows for $merged merged rows")
+  }
+
+  test("the micro-batch time is a value, not code: rows carry their batch's timestamp, " +
+    "and later batches compile no new code") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val events = MemoryStream[String]
+    val dir = Files.createTempDirectory("graft_batch_ts").toString
+    val cfg = graft.streaming.StreamingJobConfig(
+      checkpointRoot = s"$dir/ckpt", bronzePath = s"$dir/bronze",
+      quarantinePath = s"$dir/quarantine", goldPath = s"$dir/gold",
+      bronzeTrigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0),
+      goldTrigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    val job = graft.streaming.StreamingJob.start(spark, raw(events), cfg)
+    // one user per batch, every event in the same minute: after batch 1
+    // (and the no-data batch its watermark triggers) the watermark stays
+    val compilations = (1 to 3).map { b =>
+      events.addData(json(s"t$b", "2024-01-01T00:00:05Z", user = s"u$b"))
+      job.processAllAvailable()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    }
+    // batch ids of the data batches, per query, in order
+    def dataBatches(q: org.apache.spark.sql.streaming.StreamingQuery) =
+      q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+    val (bronzeIds, goldIds) = (dataBatches(job.bronze), dataBatches(job.gold))
+    job.stopAll()
+
+    // the second line of an offset-log entry is the batch metadata
+    def batchTimestampMs(query: String, id: Long): Long = {
+      val meta = Files.readAllLines(java.nio.file.Paths.get(s"$dir/ckpt/$query/offsets/$id")).get(1)
+      """"batchTimestampMs":(\d+)""".r.findFirstMatchIn(meta).get.group(1).toLong
+    }
+    assert(bronzeIds.length == 3 && goldIds.length == 3)
+    val ingested = spark.read.parquet(cfg.bronzePath).select("event_id", "ingested_at")
+      .as[(String, java.sql.Timestamp)].collect().toMap
+    val processed = spark.read.parquet(cfg.goldPath).select("user_id", "processed_at")
+      .as[(String, java.sql.Timestamp)].collect().toMap
+    for (b <- 1 to 3) {
+      assert(ingested(s"t$b").getTime == batchTimestampMs("bronze", bronzeIds(b - 1)), s"bronze batch $b")
+      assert(processed(s"u$b").getTime == batchTimestampMs("gold", goldIds(b - 1)), s"gold batch $b")
+    }
+    // batch 2 is the first to MERGE into a stored gold table, so it
+    // compiles that plan once; batch 3 runs the same plans as batch 2
+    assert(compilations(2) == compilations(1),
+      s"Janino compilations after batches 1, 2, 3: ${compilations.mkString(", ")}")
   }
 }
