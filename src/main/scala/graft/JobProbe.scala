@@ -3,8 +3,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Dev probe: per-query job/stage/task counts + wall time (3 passes,
-  * warm). Usage: runMain graft.JobProbe q_a q_b */
+/** Dev probe: per-query job/stage/task counts, task time and task CPU
+  * + wall time (3 passes, warm). Usage: runMain graft.JobProbe q_a q_b */
 object JobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -19,6 +19,7 @@ object JobProbe {
     val jobs = new AtomicInteger; val stages = new AtomicInteger
     val tasks = new AtomicInteger; val taskMs = new AtomicLong
     val deserMs = new AtomicLong; val runMs = new AtomicLong; val gcMs = new AtomicLong
+    val cpuNs = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
@@ -39,6 +40,7 @@ object JobProbe {
             deserMs.addAndGet(t.taskMetrics.executorDeserializeTime)
             runMs.addAndGet(t.taskMetrics.executorRunTime)
             gcMs.addAndGet(t.taskMetrics.jvmGCTime)
+            cpuNs.addAndGet(t.taskMetrics.executorCpuTime)
           }
         }
     })
@@ -50,7 +52,7 @@ object JobProbe {
     for (p <- 1 to 3; name <- args.toSeq) {
       Thread.sleep(50)
       val (j0, s0, t0, m0) = (jobs.get, stages.get, tasks.get, taskMs.get)
-      val (d0, r0, g0) = (deserMs.get, runMs.get, gcMs.get)
+      val (d0, r0, g0, c0) = (deserMs.get, runMs.get, gcMs.get, cpuNs.get)
       val w0 = System.nanoTime()
       run(name)
       val w = (System.nanoTime() - w0) / 1e9
@@ -58,6 +60,7 @@ object JobProbe {
       println(f"PROBE pass=$p $name%s wall=${w}%.2f jobs=${jobs.get - j0} " +
         f"stages=${stages.get - s0} tasks=${tasks.get - t0} taskSec=${(taskMs.get - m0) / 1e3}%.2f " +
         f"deserSec=${(deserMs.get - d0) / 1e3}%.2f runSec=${(runMs.get - r0) / 1e3}%.2f " +
+        f"cpuSec=${(cpuNs.get - c0) / 1e9}%.2f " +
         f"gcSec=${(gcMs.get - g0) / 1e3}%.2f")
     }
     spark.stop()

@@ -1,6 +1,5 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 /** Table contracts as code (reference S7/S8: every output table has a
@@ -107,10 +106,6 @@ object Contracts {
     keyColumns = Seq("video_id"))
 
   val All: Seq[TableContract] = Seq(BronzeEvents, Quarantine, GoldStats1Min, DimVideos)
-
-  /** Gate a live table (by path) against its contract. */
-  def enforcePath(spark: SparkSession, contract: TableContract, path: String): Either[Seq[String], Unit] =
-    enforce(contract, spark.read.parquet(path).schema)
 
   def enforce(contract: TableContract, live: StructType): Either[Seq[String], Unit] =
     contract.enforce(live)

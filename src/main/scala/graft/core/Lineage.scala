@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Lineage control for iterative operators (connected components,
   * PageRank, label propagation): round N's plan otherwise nests N
@@ -19,8 +19,15 @@ object Lineage {
     * [[org.apache.spark.sql.graftbridge.DatasetBridge]]). The local
     * leaf is read through one reused row per task, pointed at each
     * stored row in place; its scan projects every row, so plans over
-    * it never see the reuse. Both are EAGER (run one job), so callers
-    * only invoke this every k rounds, not per round. */
+    * it never see the reuse. Both are EAGER: one job per call, so a
+    * loop that cuts every round (pageRankOn, connectedComponents) pays
+    * one job per round and gets a flat plan with exact leaf statistics
+    * for it.
+    *
+    * Outside `core/` and the bridge this is the only way a frame is cut
+    * or shared: no `persist`/`cache`/`checkpoint` (LeafOnlySpec). A leaf
+    * that no returned plan reads is freed with
+    * [[org.apache.spark.sql.graftbridge.DatasetBridge.release]]. */
   def truncate(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     // partitioning-preserving local leaf (localCheckpoint under AQE
@@ -53,13 +60,15 @@ object Lineage {
   /** Truncate AND count in ONE job — the saturation probe an iterative
     * loop otherwise pays a second job submission for every round
     * (r8 verdict: per-iteration job overhead dominates the BFS-family
-    * queries at sf0.1). Local mode materializes into a persisted RDD
-    * whose count() is the materializing job; with a reliable
-    * checkpoint dir configured (the cluster fault-tolerance contract)
-    * it keeps checkpoint semantics and pays the count against the
-    * already-checkpointed leaf (cheap, and executor-loss-safe). */
-  def truncateCounted(df: DataFrame): (DataFrame, Long) =
+    * queries at sf0.1). The count is of the rows where `countWhere`
+    * holds (every row when absent), so "how many labels changed this
+    * round" comes from the same job. Local mode materializes into a
+    * persisted RDD whose count is the materializing job; with a
+    * reliable checkpoint dir configured (the cluster fault-tolerance
+    * contract) it keeps checkpoint semantics and pays the count against
+    * the already-checkpointed leaf (cheap, and executor-loss-safe). */
+  def truncateCounted(df: DataFrame, countWhere: Option[Column] = None): (DataFrame, Long) =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-      val t = df.checkpoint(); (t, t.count())
-    } else org.apache.spark.sql.graftbridge.DatasetBridge.materializeCounted(df)
+      val t = df.checkpoint(); (t, countWhere.fold(t)(t.filter).count())
+    } else org.apache.spark.sql.graftbridge.DatasetBridge.materializeCounted(df, countWhere)
 }

@@ -27,8 +27,6 @@ object TextAnalysis {
   def tokensRegex(textCol: String): Column =
     expr(s"regexp_extract_all(lower($textCol), '[a-z0-9]+', 0)")
 
-  def tokenCount(tokensCol: String): Column = size(col(tokensCol))
-
   /** Word n-gram shingles over a token-array column (1-based element_at).
     * Guarded: Spark's sequence(1, k) runs DESCENDING for k<1, so an
     * unguarded short doc would yield inverted garbage instead of []. */

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import graft.core.Lineage
 import graft.functions.TextAnalysis
 
 /** Deduplication operator family for training-data pipelines:
@@ -108,7 +110,7 @@ object Dedup {
   /** Candidate pairs: ids sharing any band bucket, deduped, with the
     * MinHash Jaccard estimate (fraction of equal signature positions).
     *
-    * Shape for scale: the signature table is persisted (it would
+    * Shape for scale: the signature table is cut to a leaf (it would
     * otherwise be recomputed — shingle explode included — once per
     * plan leg), band rows CARRY the full signature so the estimate is
     * computed inline on the (band_id, band_key) equi-join with no
@@ -116,15 +118,12 @@ object Dedup {
     * a groupBy on the pair key (a pair matching in several bands is
     * collapsed; the estimate is identical in each). */
   def lshCandidatePairs(signatures: DataFrame, idCol: String, k: Int, rowsPerBand: Int): DataFrame = {
-    // persisted for the two join legs; caller-scoped lifetime (see
-    // simhashNearDups note) — Verify/Bench clearCache between queries.
-    // Materialized EAGERLY: a lazy persist lets the two self-join legs
-    // race to compute the signature chain concurrently on the first
-    // action — measured 4.2 s vs 2.3 s cold at sf0.1 for the simhash
-    // twin, and at cluster scale it is 2x the signature work even when
-    // local wall-clock hides the race
-    val sig = signatures.persist()
-    sig.count()
+    // a leaf for the two join legs: left lazy, they race to compute
+    // the signature chain concurrently on the first action — measured
+    // 4.2 s vs 2.3 s cold at sf0.1 for the simhash twin, and at
+    // cluster scale it is 2x the signature work even when local
+    // wall-clock hides the race
+    val sig = Lineage.truncate(signatures)
     val bands = sig
       .select(col(idCol) +: explode(array(bandStructs(k, rowsPerBand): _*)).as("band") +:
         (0 until k).map(j => col(s"mh$j")): _*)
@@ -242,9 +241,6 @@ object Dedup {
   def simhash16(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     simhash(docs, idCol, textCol, bits = 16)
 
-  /** Shared with the Graphs loops — see [[graft.core.Lineage]]. */
-  private def truncateLineage(df: DataFrame): DataFrame = graft.core.Lineage.truncate(df)
-
   /** Connected components over an undirected pair list (the dedup
     * endgame: candidate pairs → duplicate CLUSTERS → one canonical doc
     * per cluster). Min-label propagation accelerated with a
@@ -253,40 +249,36 @@ object Dedup {
     * so label chains halve every round — O(log diameter) rounds
     * instead of O(diameter) plain propagation.
     *
-    * One Spark action per round: the `changed` flag is computed inside
-    * the same plan (new label < old label), so the convergence probe is
-    * the count that also materializes the round's cache — no separate
-    * comparison job. Lineage is truncated via checkpoint every
-    * `checkpointEvery` rounds so the plan tree stays flat.
+    * One Spark job per round: the `changed` flag is computed inside the
+    * same plan (new label < old label), and the round is cut to a leaf
+    * by the job that also counts its changed rows — no separate
+    * comparison job, and the plan tree stays flat.
     * (GraphX does the same thing with more machinery.) */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
-                          maxIterations: Int = 20, checkpointEvery: Int = 3): DataFrame = {
+                          maxIterations: Int = 20): DataFrame = {
     // Symmetrize with a single scan of `pairs` (explode beats a union:
     // the candidate-pair plan upstream is not computed twice), then
     // pre-partition on dst so every round's edges⋈labels join reuses
-    // the cached partitioning instead of re-shuffling the big side.
-    val edges = pairs
+    // the leaf's partitioning instead of re-shuffling the big side.
+    // A leaf: round 1's job reads edges from several subtrees (the
+    // neighbor join AND the label init below), which would otherwise
+    // race to compute the upstream candidate-pair chain (an LSH
+    // banding pass) more than once.
+    val edges = Lineage.truncate(pairs
       .select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
-      .repartition(col("dst"))
-      .persist()
-    // eager: round 1's job reads edges from several subtrees (the
-    // neighbor join AND the label init below) — lazily persisted, the
-    // stages race to compute the upstream candidate-pair chain (an
-    // LSH banding pass) more than once. Same rationale as
-    // Graphs.pageRank's e.count() / simhashNearDups' sig.count().
-    edges.count()
+      .repartition(col("dst")))
     // Fuse the first propagation round into initialization: every node
     // appears as src (edges are symmetric), so label := min(id, min
-    // neighbor) is exactly what plain round 1 would compute.
+    // neighbor) is exactly what plain round 1 would compute. Not cut:
+    // it is one aggregation over the edge leaf, read by round 1 only.
     var labels = edges
       .groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("min_nbr"))
       .select(col("id"), least(col("id"), col("min_nbr")).as("label"))
-      .persist()
     var converged = false
     var i = 0
     while (!converged && i < maxIterations) {
@@ -304,14 +296,13 @@ object Dedup {
         .withColumn("new_label", least(col("label"), coalesce(col("p_label"), col("label"))))
         .select(col("id"), col("new_label").as("label"),
           (col("new_label") < col("old_label")).as("changed"))
-      val next = (if ((i + 1) % checkpointEvery == 0) truncateLineage(next0) else next0).persist()
-      val nChanged = next.filter(col("changed")).count()
-      labels.unpersist()
+      val (next, nChanged) = Lineage.truncateCounted(next0, Some(col("changed")))
+      DatasetBridge.release(labels) // last round's leaf (the lazy init is left alone)
       labels = next
       converged = nChanged == 0L
       i += 1
     }
-    edges.unpersist()
+    DatasetBridge.release(edges)
     labels.select(col("id"), col("label").as("cluster_id"))
   }
 
@@ -349,7 +340,7 @@ object Dedup {
     // the caller-provided scale parameter, not a local constant.
     val sig = simhash(docs, idCol, textCol, bits)
     val width = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val bands = graft.core.Lineage.truncate(sig.select(col(idCol), col(shCol),
+    val bands = Lineage.truncate(sig.select(col(idCol), col(shCol),
         explode(array((0 until 4).map(b =>
           struct(lit(b).as("band_id"),
             // arithmetic >> then mask: the mask cuts the sign-fill bits,
@@ -404,16 +395,15 @@ object Dedup {
   def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
                          k: Int = 3, w: Int = 4): DataFrame = {
     require(k >= 1 && w >= 1, s"need k,w >= 1, got k=$k w=$w")
-    // persisted BELOW the explode, and not only for reuse across
+    // cut to a leaf BELOW the explode, and not only for reuse across
     // overlap's two join sides: the optimizer infers a
     // `size(__fp)>0 AND isnotnull(__fp)` pre-filter from the explode
     // and pushes it under the projections, inlining the whole
     // token→md5→window-min chain ~8× into one Filter (measured 86 s for
     // the bare fingerprint pass at sf0.1 vs ~2 s materialized). The
-    // cache boundary pins the chain to ONE evaluation per row; the
-    // inferred filter then reads the materialized array. Lives until
-    // clearCache — same contract as tfidf/lshCandidatePairs.
-    val arrs = docs
+    // leaf pins the chain to ONE evaluation per row; the inferred
+    // filter then reads the materialized array.
+    val arrs = Lineage.truncate(docs
       .withColumn("__tokens", TextAnalysis.tokens(textCol))
       .withColumn("__h", expr(
         s"""CASE WHEN size(__tokens) >= $k THEN
@@ -426,8 +416,7 @@ object Dedup {
            |    j -> array_min(slice(__h, j, $w))))
            |WHEN size(__h) > 0 THEN array(array_min(__h))
            |ELSE array() END""".stripMargin))
-      .select(col(idCol), col("__fp"))
-      .persist()
+      .select(col(idCol), col("__fp")))
     arrs.select(col(idCol), explode(col("__fp")).as("fingerprint"))
   }
 
@@ -565,7 +554,7 @@ object Dedup {
     // holding a session-shared [[shingled3]] LEAF passes it via
     // `shingled` and the tokenize pass is skipped.
     val arrs = shingled.getOrElse(
-      graft.core.Lineage.truncate(shingled3(docs, idCol, textCol)))
+      Lineage.truncate(shingled3(docs, idCol, textCol)))
     // candidate pairs straight from df-bounded shingle buckets: ONE
     // groupBy computes the df filter and the per-shingle doc list
     // together, and the ordered pairs unfold from the list in codegen —
@@ -639,7 +628,7 @@ object Dedup {
   def incrementalComponents(labels: DataFrame, newPairs: DataFrame,
                             idCol: String = "id", labelCol: String = "cluster_id",
                             aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
-    val lab = graft.core.Lineage.truncate(
+    val lab = Lineage.truncate(
       labels.select(col(idCol).as("id"), col(labelCol).as("lbl")))
     val newcomers = newPairs.select(col(aCol).as("id"))
       .union(newPairs.select(col(bCol).as("id"))).distinct()
@@ -662,7 +651,7 @@ object Dedup {
     // the distributed loop is unchanged. The collect is bounded by the
     // gate (100k edges ≈ 1.6 MB of longs), never corpus-scale.
     val maxDriverEdges = 100000L
-    val (qLeaf, nq) = graft.core.Lineage.truncateCounted(quotient)
+    val (qLeaf, nq) = Lineage.truncateCounted(quotient)
     val integralLabels = qLeaf.schema.fields.forall(f =>
       f.dataType == org.apache.spark.sql.types.LongType ||
         f.dataType == org.apache.spark.sql.types.IntegerType)
@@ -831,8 +820,8 @@ object Dedup {
     // f < 1 — the filter is the same pure id predicate either way).
     val sh = shingled match {
       case Some(leaf) if cut >= 10000 => leaf
-      case Some(leaf) => graft.core.Lineage.truncate(leaf.filter(inSample(col(idCol))))
-      case None => graft.core.Lineage.truncate(
+      case Some(leaf) => Lineage.truncate(leaf.filter(inSample(col(idCol))))
+      case None => Lineage.truncate(
         shingled3(docs.filter(inSample(col(idCol))), idCol, textCol))
     }
     // truth and cand are each consumed TWICE below (their own count
@@ -840,13 +829,13 @@ object Dedup {
     // subtrees (the PPJoin verify chain; the LSH banding chain) are
     // computed twice per run (12.7 s driver vs 6.1 s expected in r5).
     // Same multi-consumer truncate as `sh` above.
-    val truth = graft.core.Lineage.truncate(
+    val truth = Lineage.truncate(
       blockingTruthPairs(sh, idCol, trueJaccard))
     // external candidates restrict to within-sample pairs via the same
     // pure hash predicate on BOTH endpoints — no join, no id broadcast
     val cand = candidates.map(
         _.select("id_a", "id_b").filter(inSample(col("id_a")) && inSample(col("id_b"))))
-      .getOrElse(graft.core.Lineage.truncate(lshCandidatePairs(
+      .getOrElse(Lineage.truncate(lshCandidatePairs(
         minhashSignaturesFromShingles(sh, idCol, "sh", k), idCol, k, rowsPerBand)
         .select("id_a", "id_b")))
     val hit = truth.join(cand, Seq("id_a", "id_b"))

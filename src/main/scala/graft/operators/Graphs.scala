@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import graft.core.Lineage
 
 /** Distributed graph scoring over edge lists — the shuffle-on-edge
@@ -17,9 +18,9 @@ object Graphs {
     * data-dependent). Contract: every node must have at least one
     * out-edge (feed symmetric edges for bipartite/undirected graphs;
     * checked). Dangling-mass redistribution is deliberately out of
-    * scope — symmetric edges make it unreachable. Returns a PERSISTED
-    * |V|-row (id, rank) frame, already materialized; the caller
-    * unpersists it (or clearCache()s) when done.
+    * scope — symmetric edges make it unreachable. Returns the |V|-row
+    * (id, rank) frame as a leaf; the graph leaves it iterated over are
+    * released before returning.
     *
     * Each iteration: contributions = edges ⋈ ranks on src (one shuffle
     * on src, which stays stable across iterations so AQE/exchange
@@ -31,33 +32,23 @@ object Graphs {
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 2, damping: Double = 0.85): DataFrame = {
-    // ONE persisted edge-scale frame: the deduped edge list WITH the
-    // out-degree already joined on. The previous shape materialized
-    // the plain edge list AND the degree-joined copy (two |E|-row
-    // caches, two population jobs); since every consumer below either
-    // wants (src, dst, out_deg) or a projection of it, the plain copy
-    // was pure overhead — measured ~2 s of the 8.7 s loop at sf0.1.
-    // Inside this one job the distinct's exchange is reused by the
-    // degree aggregation, and AQE broadcasts the |V|-row degree frame
-    // back onto the edges.
-    val (withDeg, nodes) = degreeGraphFrames(edges, srcCol, dstCol)
-    withDeg.persist().count()
-    nodes.persist()
+    val (withDeg, nodes) = degreeLeaves(edges, srcCol, dstCol)
     val result = pageRankOn(withDeg, nodes, iters, damping)
-    nodes.unpersist()
-    withDeg.unpersist()
+    DatasetBridge.release(nodes)
+    DatasetBridge.release(withDeg)
     result
   }
 
-  /** The two frames the pageRank family iterates over — the DISTINCT
+  /** The two leaves the pageRank family iterates over — the DISTINCT
     * degree-joined edge list `(src, dst, out_deg)` and the node
-    * universe `(id)` — built but NOT materialized: callers either
-    * persist them for one run ([[pageRank]]) or cut them to
-    * SharedFrames checkpoint leaves and reuse them across every
-    * family member on the same graph (global + personalized PageRank
-    * re-derived this identical frame pair per query; at sf0.1 that
-    * was ~2 s of repeated distinct+degree shuffles per consumer). */
-  def degreeGraphFrames(edges: DataFrame, srcCol: String, dstCol: String): (DataFrame, DataFrame) = {
+    * universe `(id)`, derived from the edge leaf. ONE edge-scale leaf:
+    * the deduped edge list WITH the out-degree already joined on (every
+    * consumer wants (src, dst, out_deg) or a projection of it; a
+    * separate plain copy measured ~2 s of the 8.7 s loop at sf0.1).
+    * Inside its job the distinct's exchange is reused by the degree
+    * aggregation, and AQE broadcasts the |V|-row degree frame back onto
+    * the edges. */
+  private def degreeLeaves(edges: DataFrame, srcCol: String, dstCol: String): (DataFrame, DataFrame) = {
     // hash(src) layout at the configured shuffle width: the dedup, the
     // degree aggregate, the degree join AND every iteration's
     // edges⋈ranks equi-join are all src-keyed, so one exchange here
@@ -65,19 +56,18 @@ object Graphs {
     // src-clustered frame needs no second exchange (src ⊆ dedup keys)
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .repartition(col("src")).dropDuplicates()
-    val withDeg = e0
-      .join(e0.groupBy(col("src")).agg(count(lit(1)).as("out_deg")), "src")
-    val nodes = withDeg.select(col("src").as("id"))
-      .union(withDeg.select(col("dst").as("id"))).distinct()
+    val withDeg = Lineage.truncate(e0
+      .join(e0.groupBy(col("src")).agg(count(lit(1)).as("out_deg")), "src"))
+    val nodes = Lineage.truncate(withDeg.select(col("src").as("id"))
+      .union(withDeg.select(col("dst").as("id"))).distinct())
     (withDeg, nodes)
   }
 
   /** PageRank core loop over a PREPARED graph: `withDeg` must be the
     * DISTINCT `(src, dst, out_deg)` frame and `nodes` the node
-    * universe, both already materialized (persisted or checkpoint
-    * leaves — [[degreeGraphFrames]] builds the exact shapes). Runs the
-    * same contract check as [[pageRank]]; does NOT manage the input
-    * frames' cache lifetime (the caller owns them). */
+    * universe, both leaves (SharedFrames leaves, or [[pageRank]]'s
+    * own). Runs the same contract check as [[pageRank]]; does NOT
+    * release the input leaves (the caller owns them). */
   def pageRankOn(withDeg: DataFrame, nodes: DataFrame,
                  iters: Int = 2, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
@@ -85,7 +75,7 @@ object Graphs {
     // ONE action answers both prechecks: node count + dangling count
     // (every node needs out-degree >= 1, or rank mass silently leaks —
     // a node missing from withDeg's src side has no out-edge). Reads
-    // only materialized frames.
+    // only leaves.
     val Array(nl, dangling) = nodes.join(deg, nodes("id") === deg("src"), "left")
       .agg(count(lit(1)), count(when(col("src").isNull, 1))).head().toSeq.toArray
       .map(_.asInstanceOf[Long])
@@ -93,7 +83,7 @@ object Graphs {
       "pageRank contract: every node needs an out-edge (feed symmetric edges for undirected graphs)")
     val n = nl.toDouble
     // No explicit repartition: the |V|-row rank frame broadcasts (AQE)
-    // into the cached edge frame each round, so edges are never
+    // into the edge leaf each round, so edges are never
     // re-shuffled; the only per-iteration shuffle is the groupBy(dst)
     // of contributions
     var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
@@ -133,28 +123,23 @@ object Graphs {
     * the edge list (an isolated node has no neighbor vote and keeps its
     * own label trivially).
     *
-    * Returns a PERSISTED, already-materialized |V|-row (id, label)
-    * frame — same cache contract as [[pageRank]]: the edge-scale
-    * intermediate is released before returning, the caller unpersists
-    * (or clearCache()s) the small result when done. */
+    * Returns the |V|-row (id, label) frame as a leaf; the edge-scale
+    * leaf is released before returning. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
-    val und = edges
+    // a leaf: every iteration reads und, and a lazy frame would let
+    // the rounds' stages race to compute the (often expensive — e.g.
+    // LSH kNN) edge derivation once each
+    val und = Lineage.truncate(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
       .filter(col("src") =!= col("dst"))
       // dst-keyed layout: every round's und⋈labels equi-join is on dst,
-      // so the cached frame (InMemoryTableScan keeps its child's
-      // partitioning) is never re-shuffled by the loop (guide §2.4)
+      // so the leaf (which keeps its plan's partitioning) is never
+      // re-shuffled by the loop (guide §2.4)
       .repartition(col("dst"))
-      .dropDuplicates()
-      .persist()
-    // eager: every iteration reads und, and they all sit in ONE final
-    // job — a lazy persist lets the stages race to compute the (often
-    // expensive — e.g. LSH kNN) edge derivation once each (same
-    // rationale as pageRank's e.count())
-    und.count()
+      .dropDuplicates())
     var labels = und.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
     for (i <- 1 to iters) {
@@ -168,7 +153,7 @@ object Graphs {
       // exact-stats leaf per round — see pageRankOn's loop note
       labels = Lineage.truncate(labels)
     }
-    und.unpersist()
+    DatasetBridge.release(und)
     labels
   }
 
@@ -188,15 +173,13 @@ object Graphs {
     * [[triangleStatsOriented]] — identical `n_triangles`, wedge work
     * bounded by degree orientation. */
   def triangleStats(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = edges
+    // a leaf: 5 subtrees (counts×2, ab, bc, closing) read e inside one
+    // job — left lazy, their stages race to compute the edge
+    // derivation (an LSH kNN build for q_knn_triangles) up to 5×
+    val e = Lineage.truncate(edges
       .select(least(col(srcCol), col(dstCol)).as("u"), greatest(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .persist()
-    // eager: 5 subtrees (counts×2, ab, bc, closing) read e inside one
-    // job — lazily persisted, their stages race to compute the edge
-    // derivation (an LSH kNN build for q_knn_triangles) up to 5×
-    e.count()
+      .distinct())
     val counts = e.agg(count(lit(1)).as("n_edges"))
       .crossJoin(
         e.select(col("u").as("id")).union(e.select(col("v").as("id"))).distinct()
@@ -209,7 +192,7 @@ object Graphs {
       .agg(count(lit(1)).as("n_wedges"), count(col("closed")).as("n_triangles"))
     val result = Lineage.truncate(counts.crossJoin(wedgeAgg)
       .select(col("n_nodes"), col("n_edges"), col("n_wedges"), col("n_triangles")))
-    e.unpersist()
+    DatasetBridge.release(e)
     result
   }
 
@@ -229,33 +212,30 @@ object Graphs {
     * Same shuffle shape as [[triangleStats]] plus one degree
     * aggregate + two broadcast-able degree joins. */
   def triangleStatsOriented(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = edges
+    // a leaf, for the same reason as in triangleStats
+    val e = Lineage.truncate(edges
       .select(least(col(srcCol), col(dstCol)).as("u"), greatest(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .persist()
-    e.count() // same eager-materialization rationale as triangleStats
+      .distinct())
     // deg doubles as the node list — n_nodes counts it, both
     // orientation joins probe it (one |V|-row frame, one shuffle,
     // instead of a separate union+distinct chain just for the count)
     val deg = e.select(col("u").as("id")).union(e.select(col("v").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-      .persist()
     val counts = e.agg(count(lit(1)).as("n_edges"))
       .crossJoin(deg.agg(count(lit(1)).as("n_nodes")))
     // orient (u,v) from the ≺-smaller endpoint to the ≺-larger, where
     // x ≺ y iff (deg(x), x) < (deg(y), y) — a total order, so the
     // orientation is unique and acyclic
     val uLess = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = e
+    // a leaf: read by x, y, AND the closing probe — conserve the joins
+    val oriented = Lineage.truncate(e
       .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("id").as("v"), col("deg").as("dv")), "v")
       .select(
         when(uLess, col("u")).otherwise(col("v")).as("s"),
         when(uLess, col("v")).otherwise(col("u")).as("d"),
-        when(uLess, col("dv")).otherwise(col("du")).as("dd"))
-      .persist()
-    oriented.count() // read by x, y, AND the closing probe — conserve the joins
+        when(uLess, col("dv")).otherwise(col("du")).as("dd")))
     // wedges pair two out-edges of the same source, ordered by the
     // dst's (deg, id) so each unordered pair forms once; the pair
     // (p ≺ q) closes iff oriented edge p→q exists (p ≺ q makes p→q
@@ -269,9 +249,8 @@ object Graphs {
       .agg(count(lit(1)).as("n_wedges"), count(col("closed")).as("n_triangles"))
     val result = Lineage.truncate(counts.crossJoin(wedgeAgg)
       .select(col("n_nodes"), col("n_edges"), col("n_wedges"), col("n_triangles")))
-    e.unpersist()
-    deg.unpersist()
-    oriented.unpersist()
+    DatasetBridge.release(e)
+    DatasetBridge.release(oriented)
     result
   }
 
@@ -288,8 +267,7 @@ object Graphs {
     *
     * Shuffle budget per round: one degree aggregation + two semi-joins
     * on the endpoint keys; per-round state is the (shrinking) edge
-    * frame, persisted and released round-over-round like the pageRank
-    * loop. At any scale nothing but per-round 1-row summaries leaves
+    * frame, cut to a leaf every round like the pageRank loop. At any scale nothing but per-round 1-row summaries leaves
     * the executors. */
   def kCorePeel(edges: DataFrame, srcCol: String, dstCol: String,
                 k: Int, rounds: Int): DataFrame = {
@@ -298,7 +276,7 @@ object Graphs {
       .select(least(col(srcCol), col(dstCol)).as("u"), greatest(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-    // TRUNCATED, not persisted: each round's frame would otherwise nest
+    // Cut to leaves: each round's frame would otherwise nest
     // the (often huge) upstream edge-derivation lineage, and Catalyst
     // re-plans that whole tree on every round's action — measured 27 s
     // of mostly driver-side planning for 3 rounds over an LSH kNN graph
@@ -362,15 +340,12 @@ object Graphs {
         least(col(srcCol), col(dstCol)).as("u"),
         greatest(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    // eager barrier — intra and degree both consume it; released as
-    // soon as the per-community leaf below is materialized (the result
-    // is a checkpoint leaf, so there is no cached dependent plan to
-    // cascade-invalidate).
-    val el = e
+    // a leaf — intra and degree both consume it; released as soon as
+    // the per-community leaf below is materialized (no returned plan
+    // reads it).
+    val el = Lineage.truncate(e
       .join(labels.select(col(idCol).as("u"), col(labelCol).as("lu")), "u")
-      .join(labels.select(col(idCol).as("v"), col(labelCol).as("lv")), "v")
-      .persist()
-    el.count()
+      .join(labels.select(col(idCol).as("v"), col(labelCol).as("lv")), "v"))
     val m = el.agg(count(lit(1)).as("m"))
     val intra = el.filter(col("lu") === col("lv"))
       .groupBy(col("lu").as("label")).agg(count(lit(1)).as("intra_edges"))
@@ -383,8 +358,7 @@ object Graphs {
     // both its consumers (the Q reduce and the result rows) previously
     // re-executed the whole nodes⋈deg⋈intra subtree — one as the
     // broadcast input, one as the main branch — doubling every stage
-    // over el; the leaf also lets el be RELEASED here instead of
-    // leaking in the session cache until clearCache()
+    // over el; the leaf also lets el be released here
     val per = Lineage.truncate(nodes
       .join(deg, Seq("label"), "left")
       .join(intra, Seq("label"), "left")
@@ -396,7 +370,7 @@ object Graphs {
         col("intra_edges").cast("double") / col("m")
           - (col("degree_sum").cast("double") / (lit(2) * col("m")))
             * (col("degree_sum").cast("double") / (lit(2) * col("m")))))
-    el.unpersist()
+    DatasetBridge.release(el)
     val q = per.agg(
       (sum(floor(col("contrib") * lit(1e12) + lit(0.5)).cast("long"))
         .cast("double") / lit(1e12)).as("modularity"))
@@ -423,8 +397,7 @@ object Graphs {
     * (m ~ 1e12, d_max ~ 1e6 → 1e24), and a wrapped long here would be
     * a silently wrong sign, not an error. */
   def degreeAssortativity(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    // canonical edges as a checkpoint LEAF (not a session-cached frame
-    // the caller must clearCache()): the degree frame is consumed three
+    // canonical edges as a leaf: the degree frame is consumed three
     // times below, and over a leaf those identical aggregate subtrees
     // collapse to one exchange via reuse; the result frame itself stays
     // lazy — it is two 1-row aggregates over the leaf.
@@ -664,19 +637,17 @@ object Graphs {
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: DataFrame, seedCol: String,
                            iters: Int = 2, damping: Double = 0.85): DataFrame = {
-    val (withDeg, nodes) = degreeGraphFrames(edges, srcCol, dstCol)
-    withDeg.persist().count()
-    nodes.persist()
+    val (withDeg, nodes) = degreeLeaves(edges, srcCol, dstCol)
     val result = personalizedPageRankOn(withDeg, nodes, seeds, seedCol, iters, damping)
-    nodes.unpersist()
-    withDeg.unpersist()
+    DatasetBridge.release(nodes)
+    DatasetBridge.release(withDeg)
     result
   }
 
   /** Personalized-PageRank core loop over a PREPARED graph — same
     * prepared-frame contract as [[pageRankOn]] (`withDeg` distinct
-    * degree-joined, `nodes` the universe, both materialized, lifetime
-    * caller-owned). */
+    * degree-joined, `nodes` the universe, both leaves the caller
+    * owns). */
   def personalizedPageRankOn(withDeg: DataFrame, nodes: DataFrame,
                              seeds: DataFrame, seedCol: String,
                              iters: Int = 2, damping: Double = 0.85): DataFrame = {
@@ -691,11 +662,11 @@ object Graphs {
       "personalizedPageRank contract: every node needs an out-edge " +
         "(feed symmetric edges for undirected graphs)")
     require(nSeeds > 0L, "personalizedPageRank needs at least one seed present in the graph")
-    // teleport(v) = 1/|S| on seeds, 0 elsewhere — joined once, reused
-    // every round (|V|-row frame)
-    val teleport = nodes.join(sd.withColumn("t", lit(1.0 / nSeeds)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("t"), lit(0.0)).as("t"))
-      .persist()
+    // teleport(v) = 1/|S| on seeds, 0 elsewhere — joined once into a
+    // |V|-row leaf, read every round
+    val teleport = Lineage.truncate(
+      nodes.join(sd.withColumn("t", lit(1.0 / nSeeds)), Seq("id"), "left")
+        .select(col("id"), coalesce(col("t"), lit(0.0)).as("t")))
     var ranks = teleport.select(col("id"), col("t").as("rank"))
     for (i <- 1 to iters) {
       val contribs = withDeg.join(ranks, withDeg("src") === ranks("id"))
@@ -708,7 +679,7 @@ object Graphs {
       // exact-stats leaf per round — see pageRankOn's loop note
       ranks = Lineage.truncate(ranks)
     }
-    teleport.unpersist()
+    DatasetBridge.release(teleport)
     ranks
   }
 
@@ -760,9 +731,9 @@ object Graphs {
     * uniformly — the TextRank/co-occurrence-graph form, where an edge
     * seen 50 times should pull 50× the rank of an edge seen once.
     * Same contract and shuffle budget as [[pageRank]] (fixed rounds,
-    * every node needs an out-edge, one persisted weight-degree-joined
-    * edge frame, |V|-row rank state, the rank frame AQE-broadcasts
-    * into the cached edges each round); parallel edges SUM their
+    * every node needs an out-edge, one weight-degree-joined edge leaf,
+    * |V|-row rank state, the rank frame AQE-broadcasts into the edge
+    * leaf each round); parallel edges SUM their
     * weights (a repeated co-occurrence is signal, not a duplicate —
     * note the deliberate contrast with pageRank's distinct()).
     *
@@ -781,13 +752,10 @@ object Graphs {
     val e0 = edges.repartition(col(srcCol))
       .groupBy(col(srcCol).as("src"), col(dstCol).as("dst"))
       .agg(sum(col(weightCol).cast("double")).as("w"))
-    val withDeg = e0
-      .join(e0.groupBy(col("src")).agg(sum(col("w")).as("out_w"), min(col("w")).as("min_w")), "src")
-      .persist()
-    withDeg.count()
-    val nodes = withDeg.select(col("src").as("id"))
-      .union(withDeg.select(col("dst").as("id"))).distinct()
-      .persist()
+    val withDeg = Lineage.truncate(e0
+      .join(e0.groupBy(col("src")).agg(sum(col("w")).as("out_w"), min(col("w")).as("min_w")), "src"))
+    val nodes = Lineage.truncate(withDeg.select(col("src").as("id"))
+      .union(withDeg.select(col("dst").as("id"))).distinct())
     val deg = withDeg.groupBy(col("src"))
       .agg(first(col("out_w")).as("out_w"), first(col("min_w")).as("min_w"))
     val checkRow = nodes.join(deg, nodes("id") === deg("src"), "left")
@@ -813,8 +781,8 @@ object Graphs {
       // exact-stats leaf per round — see pageRankOn's loop note
       ranks = Lineage.truncate(ranks)
     }
-    nodes.unpersist()
-    withDeg.unpersist()
+    DatasetBridge.release(nodes)
+    DatasetBridge.release(withDeg)
     ranks
   }
 

@@ -60,11 +60,10 @@ object Linkage {
     }
     val a = docs.select(col(idCol).as("id_a") +: fields.map(f => col(f).as(s"__a_$f")): _*)
     val b = docs.select(col(idCol).as("id_b") +: fields.map(f => col(f).as(s"__b_$f")): _*)
-    val withFlags = pairs.join(a, "id_a").join(b, "id_b")
+    // a leaf — m-estimation and scoring both consume it
+    val withFlags = graft.core.Lineage.truncate(pairs.join(a, "id_a").join(b, "id_b")
       .select(Seq(col("id_a"), col("id_b"), col(pseudoCol).as("__pseudo")) ++
-        fields.map(f => (col(s"__a_$f") === col(s"__b_$f")).cast("int").as(s"agree_$f")): _*)
-      .persist()
-    withFlags.count() // eager barrier — m-estimation and scoring both consume it
+        fields.map(f => (col(s"__a_$f") === col(s"__b_$f")).cast("int").as(s"agree_$f")): _*))
     // m_k: agreement rate among pseudo-truth pairs, clamped away from {0,1}
     val clamp = (c: Column) => least(greatest(c, lit(0.001)), lit(0.999))
     val mExprs = fields.map(f => (sum(col(s"agree_$f")).cast("double") /

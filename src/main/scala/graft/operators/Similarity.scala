@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import graft.core.Lineage
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`). Brute-force cosine top-k is the exact baseline;
@@ -125,7 +127,7 @@ object Similarity {
     // checkpoint leaf so consumers (count, corpus assign, query probe)
     // don't each re-run the whole Lloyd loop (q_embed_ivf_kmeans paid
     // the 2-round fit 3× before this)
-    graft.core.Lineage.truncate(centroids)
+    Lineage.truncate(centroids)
   }
 
   /** Mean best-centroid cosine over the corpus — the (similarity-form)
@@ -236,12 +238,11 @@ object Similarity {
     val corpusSigs = {
       val s = lshSignatures(corpus, idCol, vecCol, planes)
       // kNN-graph case (queries ARE the corpus): both band legs read
-      // the same signature frame — persist + materialize it eagerly so
-      // the plane fan-out + groupBy chain computes ONCE, not once per
-      // leg (lives until the caller clearCache()s, same contract as
-      // simhashNearDups). The few-probes case keeps both legs lazy:
-      // the query side scans only the (tiny) query frame.
-      if (queries eq corpus) { val p = s.persist(); p.count(); p } else s
+      // the same signature frame — cut it to a leaf so the plane
+      // fan-out + groupBy chain computes ONCE, not once per leg. The
+      // few-probes case keeps both legs lazy: the query side scans
+      // only the (tiny) query frame.
+      if (queries eq corpus) Lineage.truncate(s) else s
     }
     val querySigs =
       if (queries eq corpus) corpusSigs
@@ -469,15 +470,14 @@ object Similarity {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
     val w = Window.partitionBy(col("query_id"), col("dim"))
       .orderBy(col("cosine").desc, col("neighbor_id"))
-    val topk = q.crossJoin(c)
+    // a leaf: truth (dim = fullDim) joins against every other dim slice
+    val topk = Lineage.truncate(q.crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", graft.plans.VectorExpressions.cosine(
         expr("slice(qv, 1, dim)"), expr("slice(cv, 1, dim)")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .select(col("query_id"), col("dim"), col("neighbor_id"))
-      .persist() // truth (dim = fullDim) joins against every other dim slice
-    topk.count()
+      .select(col("query_id"), col("dim"), col("neighbor_id")))
     val truth = topk.filter(col("dim") === fullDim)
       .select(col("query_id"), col("neighbor_id"))
     val nq = queries.count()
@@ -486,18 +486,16 @@ object Similarity {
     // the dim list is the spine: a zero-hit truncation must surface as
     // recall = 0, not silently vanish from the curve
     val spine = dims.toDF("dim")
-    // materialize the |dims|-row result BEFORE releasing the topk
-    // cache — out reads topk through two legs (truth + the join)
-    val out = spine.join(
+    // cut the |dims|-row result BEFORE releasing the topk leaf — out
+    // reads topk through two legs (truth + the join)
+    val out = Lineage.truncate(spine.join(
         topk.join(truth, Seq("query_id", "neighbor_id"))
           .groupBy(col("dim")).agg(count(lit(1)).as("n_hit")),
         Seq("dim"), "left")
       .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
       .withColumn("recall",
-        graft.queries.rd(col("n_hit").cast("double") / lit(nq * k.toDouble), 4))
-      .persist()
-    out.count()
-    topk.unpersist()
+        graft.queries.rd(col("n_hit").cast("double") / lit(nq * k.toDouble), 4)))
+    DatasetBridge.release(topk)
     out
   }
 
@@ -639,8 +637,8 @@ object Similarity {
     * bits — same guarantee every cosine-threshold query here relies
     * on).
     *
-    * Returns (rank, id, rel, mmr) for the k selections, persisted
-    * tiny; caller clearCache()s when done (house cache contract).
+    * Returns (rank, id, rel, mmr) for the k selections, a projection
+    * of the k-row selection leaf.
     *
     * @param query 1-row frame carrying `vecCol` (the query vector). */
   def mmrSelect(corpus: DataFrame, query: DataFrame, idCol: String, vecCol: String,
@@ -650,11 +648,12 @@ object Similarity {
     // dot against each selected vector (whose norm rides in the struct)
     // float→double casts are exact, so every cosine/norm bit matches
     // the float-array formulation (and the oracle's CAST AS DOUBLE[])
-    val base = corpus.select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
-      .crossJoin(broadcast(query.select(col(vecCol).cast("array<double>").as("__qv"))))
-      .select(col(idCol), col("__v"), cosineExpr("__v", "__qv").as("__rel"),
-        normExpr("__v").as("__vn"))
-      .persist()
+    // a leaf: every round scans the scored corpus
+    val base = Lineage.truncate(
+      corpus.select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
+        .crossJoin(broadcast(query.select(col(vecCol).cast("array<double>").as("__qv"))))
+        .select(col(idCol), col("__v"), cosineExpr("__v", "__qv").as("__rel"),
+          normExpr("__v").as("__vn")))
     // dot(__v, s.v) as a nested higher-order fold — runs on ≤ k
     // broadcast vectors per row, so the HOF interpreter overhead is
     // bounded by k·dim per candidate
@@ -681,20 +680,17 @@ object Similarity {
         }
       val pick = scored.orderBy(col("__mmr").desc, col(idCol)).limit(1)
         .select(lit(r).as("rank"), col(idCol), col("__v"), col("__vn"), col("__rel"), col("__mmr"))
-      // lineage MUST reset each round (eager localCheckpoint), not just
-      // persist: round r's plan references round r−1's TWICE (anti join
-      // + the folded selected-vector array), so an un-truncated chain
+      // lineage MUST reset each round (an eager leaf): round r's plan
+      // references round r−1's TWICE (anti join + the folded
+      // selected-vector array), so an un-truncated chain
       // grows ~3^k analysis nodes — measured 12→2 s at k=5 over a
       // 2k-row corpus, all driver-side planning
-      val next = graft.core.Lineage.truncate(
+      val next = Lineage.truncate(
         if (selected == null) pick else selected.union(pick))
       selected = next
     }
-    val result = selected.select(col("rank"), col(idCol), col("__rel").as("rel"),
-      col("__mmr").as("mmr")).persist()
-    result.count()
-    base.unpersist()
-    result
+    DatasetBridge.release(base)
+    selected.select(col("rank"), col(idCol), col("__rel").as("rel"), col("__mmr").as("mmr"))
   }
 
   /** Greedy farthest-point (k-center / Gonzalez) seed selection: start
@@ -716,9 +712,9 @@ object Similarity {
   def kCenterSeeds(corpus: DataFrame, idCol: String, vecCol: String,
                    k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val c = graft.core.Lineage.truncate(
+    val c = Lineage.truncate(
       corpus.select(col(idCol).as("id"), col(vecCol).as("v")))
-    var chosen = graft.core.Lineage.truncate(
+    var chosen = Lineage.truncate(
       c.orderBy(col("id")).limit(1)
         .select(col("id"), col("v"), lit(1).as("rank"), lit(0.0).as("dist")))
     for (r <- 2 to k) {
@@ -730,7 +726,7 @@ object Similarity {
         .join(chosen.select(col("id").as("xid")), col("id") === col("xid"), "left_anti")
         .orderBy(col("mind").desc, col("id")).limit(1)
         .select(col("id"), col("v"), lit(r).as("rank"), col("mind").as("dist"))
-      chosen = graft.core.Lineage.truncate(chosen.union(next))
+      chosen = Lineage.truncate(chosen.union(next))
     }
     chosen.select(col("rank"), col("id"), col("dist"))
   }

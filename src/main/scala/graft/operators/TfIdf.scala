@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
+import graft.core.Lineage
 import graft.functions.TextAnalysis
 
 /** TF-IDF term scoring over a document corpus — the classic retrieval /
@@ -28,15 +29,11 @@ object TfIdf {
     * driver-side action. */
   def tfidf(docs: DataFrame, idCol: String, textCol: String,
             broadcastVocab: Boolean = true): DataFrame = {
-    // persisted because both aggregation passes read the tokenized
-    // corpus; lives until the caller unpersists/clearCache (same
-    // contract as Dedup.lshCandidatePairs — the returned plan still
-    // references the cache, so this operator cannot unpersist it itself;
-    // Verify/Bench clearCache between queries)
-    val toks = docs
+    // a leaf: N and both aggregation passes read the tokenized corpus,
+    // which would otherwise be tokenized once per leg
+    val toks = Lineage.truncate(docs
       .withColumn("__tokens", TextAnalysis.tokens(textCol))
-      .select(col(idCol), col("__tokens"))
-      .persist()
+      .select(col(idCol), col("__tokens")))
 
     val n = toks.agg(count(lit(1)).cast("double").as("__n_docs"))
     val df = toks
@@ -83,10 +80,10 @@ object TfIdf {
     * no engine-side subtraction ordering is involved. */
   def bm25(docs: DataFrame, idCol: String, textCol: String,
            k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val toks = docs
+    // a leaf, as in tfidf
+    val toks = Lineage.truncate(docs
       .withColumn("__tokens", TextAnalysis.tokens(textCol))
-      .select(col(idCol), col("__tokens"), size(col("__tokens")).as("dl"))
-      .persist()
+      .select(col(idCol), col("__tokens"), size(col("__tokens")).as("dl")))
 
     // N and avgdl in one 1-row aggregate: broadcast, never collected.
     val stats = toks.agg(
@@ -172,7 +169,7 @@ object TfIdf {
     // size is ≤ |counts| rows — bounded, model-free state; the leaf
     // also stops the pair and norm branches re-running the tokenize
     // chain).
-    val buckets = graft.core.Lineage.truncate(counts
+    val buckets = Lineage.truncate(counts
       .groupBy(col("g"))
       .agg(sort_array(collect_list(struct(col(idCol).as("id"), col("c").as("c")))).as("ps"))
       .filter(size(col("ps")) <= maxDf)

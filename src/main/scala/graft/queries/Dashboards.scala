@@ -78,11 +78,11 @@ object Dashboards {
       .groupBy(date_trunc("minute", col("ts")).as("minute"))
       .agg(count(lit(1)).as("batch_n"),
         avg(when(col("event_type") === "purchase", 1.0).otherwise(0.0)).as("batch_rate"))
-    val joined = batch.join(rt, Seq("minute"), "left")
+    // rt filters e, so every rt minute is a batch minute: the FULL
+    // outer join of the shared formula adds no row here
+    val joined = graft.serving.Reconcile.countDiffRatio(rt, batch, Seq("minute"), "rt_n", "batch_n")
       .select(
-        col("minute"),
-        (abs(coalesce(col("rt_n"), lit(0L)) - col("batch_n")).cast("double") /
-          greatest(col("batch_n"), lit(100L))).as("count_diff_ratio"),
+        col("minute"), col("count_diff_ratio"),
         abs(coalesce(col("rt_rate"), lit(0.0)) - col("batch_rate")).as("rate_diff"))
     joined.agg(
       rd(expr("percentile(count_diff_ratio, 0.95)"), 6).as("count_p95"),

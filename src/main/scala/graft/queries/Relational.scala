@@ -615,14 +615,11 @@ object Relational {
     * SketchSpec pins; [[hllSketch]] folds it into the oracled gate. */
   def hllSketchDetail(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "events")
-    // persisted: both union legs (per-type rows + the sketch-union
-    // total) read this aggregate — without the cache the events scan +
-    // sketch build would run twice; caller-scoped lifetime (Verify/
-    // Bench clearCache between queries)
-    val perType = e.groupBy(col("event_type"))
+    // a leaf: both union legs (per-type rows + the sketch-union total)
+    // read this aggregate, which would otherwise be built once per leg
+    val perType = graft.core.Lineage.truncate(e.groupBy(col("event_type"))
       .agg(hll_sketch_agg(col("user_id")).as("sk"),
-        countDistinct(col("user_id")).as("exact_users"))
-      .persist()
+        countDistinct(col("user_id")).as("exact_users")))
     val totalRow = perType.agg(hll_union_agg(col("sk")).as("sk"))
       .crossJoin(broadcast(e.agg(countDistinct(col("user_id")).as("exact_users"))))
       .select(lit("__ALL__").as("event_type"),

@@ -884,16 +884,13 @@ object TextVector {
     * (Graphs.modularity): per-community contribution + the corpus Q —
     * "are the clusters real or random wiring?". */
   def modularityQ(s: SparkSession, dir: String): DataFrame = {
-    // canonicalize the expensive kNN chain to ONE materialized
-    // edge-pair frame; the LPA loop and the modularity joins both read
-    // the cache (Verify/Bench clearCache between queries — the
-    // simhashNearDups multi-consumer contract). LPA's symmetrized
-    // distinct edge set is identical over canonical pairs, so labels
-    // (and the oracle) are unchanged.
-    // lineage-truncated leaves: the LSH chain's logical plan is huge,
-    // and every downstream ACTION re-analyzes the full tree before the
-    // cache substitutes — a 4k-row frame was costing seconds of
-    // planning per job until cut to a checkpoint leaf
+    // canonicalize the expensive kNN chain to ONE shared edge-pair
+    // leaf; the LPA loop and the modularity joins both read it. LPA's
+    // symmetrized distinct edge set is identical over canonical pairs,
+    // so labels (and the oracle) are unchanged. Leaves, not caches: the
+    // LSH chain's logical plan is huge, and every downstream ACTION
+    // re-analyzed the full tree before a cache substituted — a 4k-row
+    // frame was costing seconds of planning per job
     val edges = knnCanon(s, dir)
     val labels = knnLpaLabels(s, dir)
     graft.operators.Graphs.modularity(edges, "a", "b", labels)
@@ -1926,13 +1923,10 @@ object TextVector {
     import graft.operators.Sampling
     val d = docs(s, dir)
     val pairs = lshPairsShared(s, dir).filter(col("est_jaccard") >= 0.5)
-    // two consumers (per-split stats AND the leaky audit) — eager
-    // persist or the minhash→banding→CC chain runs twice (the
-    // multi-consumer cache contract; lives until Verify/Bench
-    // clearCache between queries)
-    val split = Sampling.leakageSafeSplit(d, "doc_id", pairs,
-      labels = Some(lshCcLabels(s, dir))).persist()
-    split.count()
+    // two consumers (per-split stats AND the leaky audit) — a leaf, or
+    // the split's join chain runs twice
+    val split = graft.core.Lineage.truncate(Sampling.leakageSafeSplit(d, "doc_id", pairs,
+      labels = Some(lshCcLabels(s, dir))))
     val leaky = split.groupBy(col("cluster_id"))
       .agg(countDistinct(col("split")).as("ns"))
       .agg(count(when(col("ns") > 1, 1)).as("n_leaky"))
@@ -1949,8 +1943,9 @@ object TextVector {
     * the maintained signature table; emits every candidate pair
     * touching the batch. */
   def incrDedup(s: SparkSession, dir: String): DataFrame = {
-    val sigs = Dedup.minhashSignaturesFromShingles(docSh3(s, dir), "doc_id", "sh", 8).persist()
-    sigs.count() // probe AND index read it — eager multi-consumer contract
+    // a leaf: probe AND index read it
+    val sigs = graft.core.Lineage.truncate(
+      Dedup.minhashSignaturesFromShingles(docSh3(s, dir), "doc_id", "sh", 8))
     Dedup.incrementalCandidatePairs(
         sigs.filter(col("doc_id") % 10 === 0), sigs, "doc_id", k = 8, rowsPerBand = 2)
       .orderBy("id_a", "id_b")

@@ -97,13 +97,14 @@ object BaselineRegistry {
     * rows must carry sample_size >= the publish floor unless explicitly
     * fallback). Returns the merged registry. */
   def publish(registry: DataFrame, rows: DataFrame, minSample: Long = 1000L): DataFrame = {
-    // the guard is an action and the merged result re-reads `rows`; a
-    // data-derived generation (percentiles over the full decision
-    // context) would otherwise compute that aggregation twice — persist
-    // the tiny generation (rows = metrics × percentiles) across both
-    val r = rows.persist()
-    val offending = r.filter(!col("is_fallback") && col("sample_size") < minSample)
-    if (!offending.isEmpty)
+    // the guard needs an action and the merged result re-reads `rows`;
+    // a data-derived generation (percentiles over the full decision
+    // context) would otherwise compute that aggregation twice — cut the
+    // tiny generation (rows = metrics × percentiles) to a leaf whose
+    // job also counts the offending rows
+    val (r, offending) = graft.core.Lineage.truncateCounted(rows,
+      Some(!col("is_fallback") && col("sample_size") < minSample))
+    if (offending > 0)
       throw new IllegalStateException(
         s"publish guard violated: non-fallback baseline rows with sample_size < $minSample")
     MergeOps.insertIfAbsent(registry.select(columns.map(col): _*),

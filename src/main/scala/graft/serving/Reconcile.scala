@@ -25,17 +25,17 @@ object Reconcile {
     else math.max(uniqueRaw - row.getLong(1), 0L).toDouble / uniqueRaw
   }
 
-  /** Minute-level count reconciliation between an RT aggregate and a
-    * batch recompute: p95 of abs(rt−batch)/max(batch, floor). FULL outer
-    * join: a key present only on the RT side (RT overcounting a grain
-    * batch says shouldn't exist) must inflate the ratio, not vanish.
-    * Empty inputs → 0.0 (percentile over zero rows is null). */
-  def countDiffP95(rt: DataFrame, batch: DataFrame, keyCols: Seq[String],
-                   rtCount: String, batchCount: String, floor: Long = 100L): Double = {
-    val p = batch.join(rt, keyCols, "full_outer")
-      .select((abs(coalesce(col(rtCount), lit(0L)) - coalesce(col(batchCount), lit(0L))).cast("double") /
-        greatest(coalesce(col(batchCount), lit(0L)), lit(floor))).as("ratio"))
-      .agg(expr("percentile(ratio, 0.95)")).collect()(0)
-    if (p.isNullAt(0)) 0.0 else p.getDouble(0)
+  /** Per-key count reconciliation between an RT aggregate and a batch
+    * recompute: the two frames FULL-outer-joined on `keyCols`, plus
+    * `count_diff_ratio` = abs(rt−batch)/max(batch, floor), a missing side
+    * counting 0 (the reference's formula; its p95 is the gated figure).
+    * FULL outer: a key present only on the RT side (RT overcounting a
+    * grain batch says shouldn't exist) must inflate the ratio, not
+    * vanish. */
+  def countDiffRatio(rt: DataFrame, batch: DataFrame, keyCols: Seq[String],
+                     rtCount: String, batchCount: String, floor: Long = 100L): DataFrame = {
+    val (r, b) = (coalesce(col(rtCount), lit(0L)), coalesce(col(batchCount), lit(0L)))
+    batch.join(rt, keyCols, "full_outer")
+      .withColumn("count_diff_ratio", abs(r - b).cast("double") / greatest(b, lit(floor)))
   }
 }

@@ -16,8 +16,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the batch's term counts against the baseline's, which is a batch
   * join per micro-batch, not a continuously-maintained stateful
   * aggregation — the same reasoning as the MERGE sink (S5/S6). The
-  * baseline term-count frame is computed ONCE and persisted; each
-  * micro-batch joins against the cached ~|vocab|-row frame, so
+  * baseline term-count frame is computed ONCE into a leaf; each
+  * micro-batch joins against that ~|vocab|-row frame, so
   * per-batch cost is one tokenize + one hash aggregate + one keyed
   * join regardless of how much history the baseline represents.
   *
@@ -32,12 +32,10 @@ object DriftMonitor {
             outDir: String, checkpointDir: String,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val spark = baseline.sparkSession
-    // baseline term counts, computed once for the life of the query
-    val baseCounts = baseline
+    // baseline term counts, a leaf computed once for the life of the query
+    val baseCounts = graft.core.Lineage.truncate(baseline
       .select(explode(graft.functions.TextAnalysis.tokens(textCol)).as("term"))
-      .groupBy(col("term")).agg(count(lit(1)).as("ca"))
-      .persist()
-    baseCounts.count()
+      .groupBy(col("term")).agg(count(lit(1)).as("ca")))
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {

@@ -28,19 +28,4 @@ object KafkaSource {
         col("topic").as("source_topic"),
         col("partition").as("source_partition"),
         col("offset").as("source_offset"))
-
-  /** End-to-end content-events job from Kafka (parse → validate →
-    * 3-sink fan-out), the reference's main() equivalent. */
-  def startContentEventsJob(spark: SparkSession, bootstrapServers: String, topic: String,
-                            settings: graft.core.JobSettings): StreamingJob = {
-    val cfg = StreamingJobConfig(
-      checkpointRoot = settings.checkpointRoot,
-      bronzePath = settings.bronzePath,
-      quarantinePath = settings.quarantinePath,
-      goldPath = settings.goldPath,
-      watermark = settings.watermark,
-      bronzeTrigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(settings.bronzeTriggerSeconds * 1000L),
-      goldTrigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(settings.goldTriggerSeconds * 1000L))
-    StreamingJob.start(spark, raw(spark, bootstrapServers, topic), cfg)
-  }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
 import java.time.Instant
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -47,6 +48,19 @@ final case class StreamBenchResult(
 
 object StreamBench {
 
+  /** File names a file-source stream consumed, in batch order, read
+    * from its source log (`v1` header, then one JSON entry per file
+    * with its `path` and `batchId`; compacted logs repeat entries). */
+  private def consumedFiles(sourceLog: java.nio.file.Path): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val entry = """"path":"([^"]*)".*"batchId":(\d+)""".r.unanchored
+    Files.list(sourceLog).iterator().asScala.toSeq
+      .filterNot(_.getFileName.toString.startsWith(".")) // checksum files
+      .flatMap(f => Files.readAllLines(f).asScala)
+      .collect { case entry(path, batch) => (batch.toLong, path.split('/').last) }
+      .distinct.sortBy(_._1).map(_._2)
+  }
+
   /** Run the fan-out over `totalEvents` generated events split into
     * `chunks` JSONL files (one micro-batch each per sink). */
   def run(spark: SparkSession, totalEvents: Int = 24000, chunks: Int = 8): StreamBenchResult = {
@@ -67,8 +81,17 @@ object StreamBench {
     val inDir = Paths.get(dir, "in")
     Files.createDirectories(inDir)
     val chunkSize = math.max(1, jsons.size / chunks)
-    jsons.grouped(chunkSize).zipWithIndex.foreach { case (chunk, i) =>
+    val files = jsons.grouped(chunkSize).zipWithIndex.map { case (chunk, i) =>
       Files.write(inDir.resolve(f"chunk-$i%04d.jsonl"), chunk.mkString("\n").getBytes("UTF-8"))
+    }.toIndexedSeq
+    // chunk i gets modification time base + i s: the file source orders
+    // new files by modification time alone, and files written in one
+    // burst share a millisecond, so chunks would otherwise enter out of
+    // name order, tied differently from run to run (and with them the
+    // watermark, the watermark drops and the state evictions)
+    val base = System.currentTimeMillis() - files.size * 1000L
+    files.zipWithIndex.foreach { case (f, i) =>
+      Files.setLastModifiedTime(f, FileTime.fromMillis(base + i * 1000L))
     }
 
     // streaming state width is a THROUGHPUT parameter, not a cluster
@@ -114,6 +137,11 @@ object StreamBench {
       val t0 = System.nanoTime()
       job.processAllAvailable()
       val elapsed = (System.nanoTime() - t0) / 1e9
+      for (q <- Seq("bronze", "quarantine", "gold")) {
+        val order = consumedFiles(Paths.get(dir, "ckpt", q, "sources", "0"))
+        require(order == files.map(_.getFileName.toString),
+          s"$q consumed the chunks out of name order: ${order.mkString(", ")}")
+      }
       val progresses = job.all.flatMap(_.recentProgress.toSeq)
       val batchDurations = progresses
         .filter(_.numInputRows > 0)

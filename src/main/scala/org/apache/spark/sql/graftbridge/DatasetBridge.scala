@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeSet, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSet, BindReferences, Predicate, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
@@ -174,12 +176,24 @@ object DatasetBridge {
 
   /** Materialize `df` into a persisted leaf of packed pages that keeps
     * the executed plan's final partitioning/ordering. One job, whose
-    * result is the row count. */
-  def materializeCounted(df: DataFrame): (DataFrame, Long) = {
+    * result is the number of rows for which `countWhere` holds (every
+    * row when it is absent): a loop's saturation probe ("did any row
+    * change?") rides the job that cuts the round. */
+  def materializeCounted(df: DataFrame, countWhere: Option[Column] = None): (DataFrame, Long) = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val spark = ds.sparkSession
     val output = ds.logicalPlan.output
     val types = output.map(_.dataType).toArray
+    val numFields = output.size
+    // the predicate, resolved against the frame and bound to its
+    // output ordinals; evaluated on the stored rows of each page
+    val where = countWhere.map { c =>
+      val resolved = ds.select(c).queryExecution.analyzed match {
+        case Project(Seq(Alias(e, _)), _) => e
+        case Project(Seq(e), _) => e
+      }
+      BindReferences.bindReference(resolved, output)
+    }
     // localCheckpoint (not a bare persist): truncates the RDD lineage
     // at materialization — without it every later task referencing the
     // leaf serializes the ENTIRE accumulated upstream RDD DAG into its
@@ -187,8 +201,20 @@ object DatasetBridge {
     // diameter double sweep once loop leaves chained).
     val pages = ds.queryExecution.toRdd.mapPartitions(rows => pack(rows, types))
     pages.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
-    val n = spark.sparkContext.runJob(pages,
-      (it: Iterator[Array[Byte]]) => it.map(rowsIn(_).toLong).sum).sum
+    // per partition: (stored rows, rows where the predicate holds)
+    val counts = spark.sparkContext.runJob(pages, (it: Iterator[Array[Byte]]) => where match {
+      case None =>
+        val n = it.map(rowsIn(_).toLong).sum
+        (n, n)
+      case Some(cond) =>
+        val p = Predicate.create(cond)
+        p.initialize(TaskContext.getPartitionId())
+        var n = 0L
+        var hit = 0L
+        unpack(it, numFields).foreach { row => n += 1; if (p.eval(row)) hit += 1 }
+        (n, hit)
+    })
+    val n = counts.map(_._1).sum
     // read the FINAL plan only after the materializing job: AQE's
     // executedPlan is not final until the query has run
     val phys = unwrapAqe(ds.queryExecution.executedPlan)
@@ -211,11 +237,10 @@ object DatasetBridge {
       .EstimationUtils.getSizePerRow(output)
     val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
       sizeInBytes = (sizePerRow * n).max(1), rowCount = Some(n))
-    val numFields = output.size
     val rows = pages.mapPartitions(it => unpack(it, numFields), preservesPartitioning = true)
     val leaf = LogicalRDD(output, rows, partitioning, ordering, isStreaming = false)(
       spark, Some(stats), None).newInstance()
-    (classic.Dataset.ofRows(spark, leaf), n)
+    (classic.Dataset.ofRows(spark, leaf), counts.map(_._2).sum)
   }
 
   /** [[materializeCounted]] without surfacing the count — the

@@ -50,8 +50,11 @@ class CoverageMapSpec extends AnyFunSuite {
       s"README.md says ${readmeCount.getOrElse("<missing 'driver contract: N queries'>")}, ledger has $n")
   }
 
-  test("no dead operators: every public def in operators/ and plans/ is referenced " +
-    "outside its own file (r8 hygiene: ~440 LoC landed with zero call sites)") {
+  /** Public top-level defs in the main files under `dirs` whose name
+    * appears nowhere beyond its definition site (call site, codegen
+    * template string, scaladoc link, spec), as `File.name`. Top-level
+    * members only (2-space indent — deeper is a local helper). */
+  private def deadDefs(dirs: Seq[String]): Seq[String] = {
     import scala.jdk.CollectionConverters._
     import java.nio.file.{Files, Paths}
     val main = Paths.get("src/main/scala/graft")
@@ -60,19 +63,27 @@ class CoverageMapSpec extends AnyFunSuite {
       Files.walk(p).iterator().asScala.filter(_.toString.endsWith(".scala")).toList
     val all = (scalaFiles(main) ++ scalaFiles(test))
       .map(p => p.toString -> new String(Files.readAllBytes(p), "UTF-8")).toMap
-    // top-level members only (2-space indent — deeper is a local helper);
-    // a def is live if its name appears ANYWHERE beyond the definition
-    // site (call site, codegen template string, scaladoc link, spec)
     val defRe = """(?m)^  def\s+([A-Za-z][A-Za-z0-9_]*)""".r
     val scoped = all.filter { case (path, _) =>
-      path.contains("/operators/") || path.contains("/plans/") }
-    val dead = for {
+      path.startsWith(main.toString) && dirs.exists(d => path.contains(s"/$d/")) }
+    for {
       (path, src) <- scoped.toSeq
       name <- defRe.findAllMatchIn(src).map(_.group(1)).distinct
       if !Set("apply", "unapply", "main", "toString", "equals", "hashCode").contains(name)
       refs = all.valuesIterator.map(s => name.r.findAllIn(s).size).sum
       if refs <= 1
     } yield s"${path.split('/').last}.$name"
+  }
+
+  test("no dead operators: every public def in operators/ and plans/ is referenced " +
+    "outside its own file (r8 hygiene: ~440 LoC landed with zero call sites)") {
+    val dead = deadDefs(Seq("operators", "plans"))
+    assert(dead.isEmpty,
+      s"public defs with zero references beyond their definition (${dead.size}): ${dead.sorted.mkString(", ")}")
+  }
+
+  test("no dead defs in core/, serving/, streaming/, functions/ or generator/ either") {
+    val dead = deadDefs(Seq("core", "serving", "streaming", "functions", "generator"))
     assert(dead.isEmpty,
       s"public defs with zero references beyond their definition (${dead.size}): ${dead.sorted.mkString(", ")}")
   }

@@ -135,6 +135,31 @@ class DatasetBridgeSpec extends AnyFunSuite {
     assert(agg.getLong(0) == 200000L && agg.getLong(1) == 199999L * 200000L / 2 && agg.getLong(2) == 200000L)
   }
 
+  test("countWhere counts the matching rows in the same job; the leaf keeps every row") {
+    val df = spark.range(0, 50000, 1, 3)
+      .select(col("id"), when(col("id") % 10 === 0, lit(null)).otherwise(col("id") % 7 === 0).as("hit"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (leaf, hits) = try {
+      val r = Lineage.truncateCounted(df, Some(col("hit")))
+      // job events reach listeners asynchronously
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (jobs.get == 0 && System.nanoTime() < deadline) Thread.sleep(20)
+      Thread.sleep(200)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // a NULL predicate is not a match, as in filter
+    assert(hits == df.filter(col("hit")).count())
+    assert(jobs.get == 1, s"truncateCounted with a predicate ran ${jobs.get} jobs")
+    assert(leaf.count() == 50000L)
+    assert(DatasetBridge.materializeCounted(df, Some(lit(false)))._2 == 0L)
+    DatasetBridge.release(leaf)
+  }
+
   test("a leaf stores about its row bytes, not one object per row") {
     val rows = 200000L
     val df = spark.range(0, rows, 1, 2).select(col("id"), lit("0123456789").as("s"))

@@ -45,7 +45,8 @@ class IncrementalCcSpec extends AnyFunSuite {
   test("lineage barrier: the incoming labeling's plan never leaks into the " +
     "output plan (r5 regression — 822 s planning blowup at sf0.1)") {
     // Plant a distinctive literal in the BASE labeling's lineage (a
-    // vacuous filter that analysis keeps). The r5 822 s blowup was
+    // vacuous filter that analysis keeps; on the labeling itself, since
+    // connectedComponents cuts every round to a leaf). The r5 822 s blowup was
     // every downstream action re-ANALYZING the base chain (LSH banding
     // + every CC round), embedded 3x per plan — cache substitution
     // happens only AFTER analysis, so a persisted base doesn't help.
@@ -56,8 +57,8 @@ class IncrementalCcSpec extends AnyFunSuite {
     // this fails immediately.
     import org.apache.spark.sql.functions.{length, lit}
     val baseEdges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-      .filter(length(lit("__cc_lineage_probe__")) > 0)
     val base = Dedup.connectedComponents(baseEdges)
+      .filter(length(lit("__cc_lineage_probe__")) > 0)
     assert(base.queryExecution.analyzed.toString.contains("__cc_lineage_probe__"),
       "self-check: the probe literal must survive into the base labeling's plan")
     val out = Dedup.incrementalComponents(

@@ -253,13 +253,13 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("q_winnow reads fingerprints from the cache barrier (md5 chain evaluated once)") {
-    // without the persist below the explode, the optimizer's inferred
+    // without the leaf below the explode, the optimizer's inferred
     // size()>0 pre-filter inlines the token→md5→window-min chain ~8×
     // into one Filter (measured 82× slower at sf0.1); the barrier must
-    // stay in the plan
+    // stay in the plan, as a leaf scan
     val p = plan("q_winnow")
-    assert(p.contains("InMemoryTableScan"),
-      "winnow fingerprint persist barrier lost — the explode pre-filter will re-run the md5 chain")
+    assert(p.contains("Scan ExistingRDD"),
+      "winnow fingerprint leaf barrier lost — the explode pre-filter will re-run the md5 chain")
     val chains = "asciitokens".r.findAllIn(p.toLowerCase).length
     assert(chains <= 2, s"tokenizer appears $chains times — expression chain duplicated again")
   }

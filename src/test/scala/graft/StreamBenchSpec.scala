@@ -44,6 +44,7 @@ class StreamBenchSpec extends AnyFunSuite {
       totalEvents = 12000, lateRatioConfigured = 0.0)
     assert(r.bronzeRows == 12000 && r.quarantineRows == 0, s"clean stream: $r")
     val rows = r.stateRowsPerBatch.filter(_ > 0)
+    info(s"state rows per stateful batch: ${rows.mkString(", ")}")
     assert(rows.length >= 9, s"need enough stateful batches to see the plateau: $rows")
     val n = rows.length
     val mid = rows.slice(n / 3, 2 * n / 3).max
