@@ -3,8 +3,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Dev probe: per-query job/stage/task counts, task time and task CPU
-  * + wall time (3 passes, warm). Usage: runMain graft.JobProbe q_a q_b */
+/** Dev probe: per-query job/stage/task counts, task time/CPU, wall time and
+  * stored leaf bytes (3 passes, warm). Usage: runMain graft.JobProbe q_a q_b */
 object JobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -44,9 +44,12 @@ object JobProbe {
           }
         }
     })
-    def run(name: String): Unit = {
+    // bytes of every stored leaf after the query, shared ones included
+    def run(name: String): Long = {
       SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      val leafBytes = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum
       spark.sharedState.cacheManager.clearCache()
+      leafBytes
     }
     run("q_topk")
     for (p <- 1 to 3; name <- args.toSeq) {
@@ -54,13 +57,13 @@ object JobProbe {
       val (j0, s0, t0, m0) = (jobs.get, stages.get, tasks.get, taskMs.get)
       val (d0, r0, g0, c0) = (deserMs.get, runMs.get, gcMs.get, cpuNs.get)
       val w0 = System.nanoTime()
-      run(name)
+      val leafBytes = run(name)
       val w = (System.nanoTime() - w0) / 1e9
       Thread.sleep(100) // let listener drain
       println(f"PROBE pass=$p $name%s wall=${w}%.2f jobs=${jobs.get - j0} " +
         f"stages=${stages.get - s0} tasks=${tasks.get - t0} taskSec=${(taskMs.get - m0) / 1e3}%.2f " +
         f"deserSec=${(deserMs.get - d0) / 1e3}%.2f runSec=${(runMs.get - r0) / 1e3}%.2f " +
-        f"cpuSec=${(cpuNs.get - c0) / 1e9}%.2f " +
+        f"cpuSec=${(cpuNs.get - c0) / 1e9}%.2f leafMB=${leafBytes / 1e6}%.1f " +
         f"gcSec=${(gcMs.get - g0) / 1e3}%.2f")
     }
     spark.stop()

@@ -22,9 +22,10 @@ object Graphs {
     * (id, rank) frame as a leaf; the graph leaves it iterated over are
     * released before returning.
     *
-    * Each iteration: contributions = edges ⋈ ranks on src (one shuffle
-    * on src, which stays stable across iterations so AQE/exchange
-    * reuse applies), then sum per dst (one shuffle on dst). At any
+    * Each iteration: contributions = edges ⋈ per-node shares
+    * (rank / out_deg) on src (one shuffle on src, which stays stable
+    * across iterations so AQE/exchange reuse applies), then sum per
+    * dst (one shuffle on dst). At any
     * scale the state frame is |V| rows — never collected.
     *
     * @param edges (srcCol, dstCol) directed edge list; duplicates are
@@ -32,79 +33,87 @@ object Graphs {
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 2, damping: Double = 0.85): DataFrame = {
-    val (withDeg, nodes) = degreeLeaves(edges, srcCol, dstCol)
-    val result = pageRankOn(withDeg, nodes, iters, damping)
+    val (distinctEdges, nodes) = degreeLeaves(edges, srcCol, dstCol)
+    val result = pageRankOn(distinctEdges, nodes, iters, damping)
     DatasetBridge.release(nodes)
-    DatasetBridge.release(withDeg)
+    DatasetBridge.release(distinctEdges)
     result
   }
 
-  /** The two leaves the pageRank family iterates over — the DISTINCT
-    * degree-joined edge list `(src, dst, out_deg)` and the node
-    * universe `(id)`, derived from the edge leaf. ONE edge-scale leaf:
-    * the deduped edge list WITH the out-degree already joined on (every
-    * consumer wants (src, dst, out_deg) or a projection of it; a
-    * separate plain copy measured ~2 s of the 8.7 s loop at sf0.1).
-    * Inside its job the distinct's exchange is reused by the degree
-    * aggregation, and AQE broadcasts the |V|-row degree frame back onto
-    * the edges. */
+  /** The two leaves the pageRank family iterates over, each at its own
+    * grain: the DISTINCT edge list `(src, dst)`, the one edge-scale
+    * leaf, and the node leaf `(id, out_deg)` — every node of either
+    * side, with its out-degree, NULL for a node with no out-edge (which
+    * the loops' prechecks reject). Degree is a per-node fact, so it is
+    * stored |V| times, not joined onto every edge. */
   private def degreeLeaves(edges: DataFrame, srcCol: String, dstCol: String): (DataFrame, DataFrame) = {
-    // hash(src) layout at the configured shuffle width: the dedup, the
-    // degree aggregate, the degree join AND every iteration's
-    // edges⋈ranks equi-join are all src-keyed, so one exchange here
-    // replaces one per consumer (guide §2.4); dropDuplicates over the
-    // src-clustered frame needs no second exchange (src ⊆ dedup keys)
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .repartition(col("src")).dropDuplicates()
-    val withDeg = Lineage.truncate(e0
-      .join(e0.groupBy(col("src")).agg(count(lit(1)).as("out_deg")), "src"))
-    val nodes = Lineage.truncate(withDeg.select(col("src").as("id"))
-      .union(withDeg.select(col("dst").as("id"))).distinct())
-    (withDeg, nodes)
+    // hash(src) layout at the configured shuffle width: the dedup AND
+    // every iteration's edges⋈shares equi-join are src-keyed, so one
+    // exchange here replaces one per round (guide §2.4);
+    // dropDuplicates over the src-clustered frame needs no second
+    // exchange (src ⊆ dedup keys)
+    val e = Lineage.truncate(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .repartition(col("src")).dropDuplicates())
+    // one groupBy over both endpoints: a dst-only node sums no 1s
+    val nodes = Lineage.truncate(
+      e.select(col("src").as("id"), lit(1L).as("one"))
+        .union(e.select(col("dst").as("id"), lit(null).cast("long").as("one")))
+        .groupBy(col("id")).agg(sum(col("one")).as("out_deg")))
+    (e, nodes)
   }
 
-  /** PageRank core loop over a PREPARED graph: `withDeg` must be the
-    * DISTINCT `(src, dst, out_deg)` frame and `nodes` the node
-    * universe, both leaves (SharedFrames leaves, or [[pageRank]]'s
-    * own). Runs the same contract check as [[pageRank]]; does NOT
-    * release the input leaves (the caller owns them). */
-  def pageRankOn(withDeg: DataFrame, nodes: DataFrame,
+  /** Each node's share of its rank, `rank / out_deg`, keyed as the
+    * edge source: divided once per node, then joined onto the edges. */
+  private def rankShares(ranks: DataFrame, nodes: DataFrame): DataFrame =
+    ranks.join(nodes, "id").select(col("id").as("src"), (col("rank") / col("out_deg")).as("c"))
+
+  /** Cut a round's rank frame to a leaf; free the previous round's. */
+  private def nextRound(prev: DataFrame, next: DataFrame): DataFrame = {
+    val leaf = Lineage.truncate(next)
+    DatasetBridge.release(prev)
+    leaf
+  }
+
+  /** PageRank core loop over a PREPARED graph: `edges` must be the
+    * DISTINCT `(src, dst)` frame and `nodes` the node leaf
+    * `(id, out_deg)` ([[degreeLeaves]]' shapes), both leaves
+    * (SharedFrames leaves, or [[pageRank]]'s own). Runs the same
+    * contract check as [[pageRank]]; does NOT release the input leaves
+    * (the caller owns them). Each round's rank leaf is freed once the
+    * next one is cut. */
+  def pageRankOn(edges: DataFrame, nodes: DataFrame,
                  iters: Int = 2, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val deg = withDeg.groupBy(col("src")).agg(first(col("out_deg")).as("out_deg"))
-    // ONE action answers both prechecks: node count + dangling count
-    // (every node needs out-degree >= 1, or rank mass silently leaks —
-    // a node missing from withDeg's src side has no out-edge). Reads
-    // only leaves.
-    val Array(nl, dangling) = nodes.join(deg, nodes("id") === deg("src"), "left")
-      .agg(count(lit(1)), count(when(col("src").isNull, 1))).head().toSeq.toArray
+    // ONE action over the |V|-row node leaf answers both prechecks:
+    // node count + dangling count (every node needs out-degree >= 1, or
+    // rank mass silently leaks)
+    val Array(nl, dangling) = nodes
+      .agg(count(lit(1)), count(when(col("out_deg").isNull, 1))).head().toSeq.toArray
       .map(_.asInstanceOf[Long])
     require(dangling == 0L,
       "pageRank contract: every node needs an out-edge (feed symmetric edges for undirected graphs)")
     val n = nl.toDouble
-    // No explicit repartition: the |V|-row rank frame broadcasts (AQE)
-    // into the edge leaf each round, so edges are never
-    // re-shuffled; the only per-iteration shuffle is the groupBy(dst)
-    // of contributions
+    // No explicit repartition: the |V|-row share frame broadcasts (AQE)
+    // into the edge leaf each round, so edges are never re-shuffled;
+    // the only per-iteration edge-scale shuffle is the groupBy(dst) of
+    // contributions
     var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
     for (i <- 1 to iters) {
-      val contribs = withDeg.join(ranks, withDeg("src") === ranks("id"))
-        .select(col("dst").as("id"), (col("rank") / col("out_deg")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("inflow"))
-      // nodes with no in-edges keep only the teleport term
-      ranks = nodes.join(contribs, Seq("id"), "left")
-        .select(col("id"),
-          (lit((1.0 - damping) / n) + lit(damping) * coalesce(col("inflow"), lit(0.0)))
-            .as("rank"))
+      val contribs = edges.join(rankShares(ranks, nodes), "src")
+        .groupBy(col("dst").as("id")).agg(sum(col("c")).as("inflow"))
+      // nodes with no in-edges keep only the teleport term.
       // EVERY round ends as an exact-stats |V|-row leaf (one small job):
       // a lazy multi-round plan lets the size-only estimator inflate
       // (join size = product of child sizes), which locks the next
-      // round's edges⋈ranks into a sort-merge join that re-SORTS the
+      // round's edges⋈shares into a sort-merge join that re-SORTS the
       // co-partitioned edge leaf per round — AQE cannot convert it at
       // runtime because the leaf side has no shuffle stage. With exact
       // leaf stats the planner picks broadcast/shuffled-hash correctly
       // at ANY scale, and plan depth is bounded as a side effect.
-      ranks = Lineage.truncate(ranks)
+      ranks = nextRound(ranks, nodes.join(contribs, Seq("id"), "left")
+        .select(col("id"),
+          (lit((1.0 - damping) / n) + lit(damping) * coalesce(col("inflow"), lit(0.0)))
+            .as("rank")))
     }
     ranks
   }
@@ -637,26 +646,24 @@ object Graphs {
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: DataFrame, seedCol: String,
                            iters: Int = 2, damping: Double = 0.85): DataFrame = {
-    val (withDeg, nodes) = degreeLeaves(edges, srcCol, dstCol)
-    val result = personalizedPageRankOn(withDeg, nodes, seeds, seedCol, iters, damping)
+    val (distinctEdges, nodes) = degreeLeaves(edges, srcCol, dstCol)
+    val result = personalizedPageRankOn(distinctEdges, nodes, seeds, seedCol, iters, damping)
     DatasetBridge.release(nodes)
-    DatasetBridge.release(withDeg)
+    DatasetBridge.release(distinctEdges)
     result
   }
 
   /** Personalized-PageRank core loop over a PREPARED graph — same
-    * prepared-frame contract as [[pageRankOn]] (`withDeg` distinct
-    * degree-joined, `nodes` the universe, both leaves the caller
-    * owns). */
-  def personalizedPageRankOn(withDeg: DataFrame, nodes: DataFrame,
+    * prepared-frame contract as [[pageRankOn]] (`edges` distinct,
+    * `nodes` the `(id, out_deg)` leaf, both leaves the caller owns). */
+  def personalizedPageRankOn(edges: DataFrame, nodes: DataFrame,
                              seeds: DataFrame, seedCol: String,
                              iters: Int = 2, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val sd = seeds.select(col(seedCol).as("id")).distinct()
-    val deg = withDeg.groupBy(col("src")).agg(first(col("out_deg")).as("out_deg"))
-    val Array(dangling, nSeeds) = nodes.join(deg, nodes("id") === deg("src"), "left")
+    val Array(dangling, nSeeds) = nodes
       .join(sd.withColumn("is_seed", lit(1)), Seq("id"), "left")
-      .agg(count(when(col("src").isNull, 1)), count(col("is_seed")))
+      .agg(count(when(col("out_deg").isNull, 1)), count(col("is_seed")))
       .head().toSeq.toArray.map(_.asInstanceOf[Long])
     require(dangling == 0L,
       "personalizedPageRank contract: every node needs an out-edge " +
@@ -669,15 +676,12 @@ object Graphs {
         .select(col("id"), coalesce(col("t"), lit(0.0)).as("t")))
     var ranks = teleport.select(col("id"), col("t").as("rank"))
     for (i <- 1 to iters) {
-      val contribs = withDeg.join(ranks, withDeg("src") === ranks("id"))
-        .select(col("dst").as("id"), (col("rank") / col("out_deg")).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("inflow"))
-      ranks = teleport.join(contribs, Seq("id"), "left")
+      val contribs = edges.join(rankShares(ranks, nodes), "src")
+        .groupBy(col("dst").as("id")).agg(sum(col("c")).as("inflow"))
+      ranks = nextRound(ranks, teleport.join(contribs, Seq("id"), "left")
         .select(col("id"),
           (lit(1.0 - damping) * col("t")
-            + lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank"))
-      // exact-stats leaf per round — see pageRankOn's loop note
-      ranks = Lineage.truncate(ranks)
+            + lit(damping) * coalesce(col("inflow"), lit(0.0))).as("rank")))
     }
     DatasetBridge.release(teleport)
     ranks
@@ -731,11 +735,12 @@ object Graphs {
     * uniformly — the TextRank/co-occurrence-graph form, where an edge
     * seen 50 times should pull 50× the rank of an edge seen once.
     * Same contract and shuffle budget as [[pageRank]] (fixed rounds,
-    * every node needs an out-edge, one weight-degree-joined edge leaf,
-    * |V|-row rank state, the rank frame AQE-broadcasts into the edge
-    * leaf each round); parallel edges SUM their
-    * weights (a repeated co-occurrence is signal, not a duplicate —
-    * note the deliberate contrast with pageRank's distinct()).
+    * every node needs an out-edge, one `(src, dst, w)` edge leaf and
+    * an `(id, out_w, min_w)` node leaf, |V|-row rank state, the rank
+    * frame AQE-broadcasts into the edge leaf each round); parallel
+    * edges SUM their weights (a repeated co-occurrence is signal, not
+    * a duplicate — note the deliberate contrast with pageRank's
+    * distinct()).
     *
     * Weight contract: every (summed) edge weight must be POSITIVE —
     * w ≤ 0 or an all-zero out-weight makes rank·w/out_w NaN/Infinity
@@ -746,20 +751,20 @@ object Graphs {
                        weightCol: String, iters: Int = 2,
                        damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    // src-keyed from the first exchange: weight-sum, out-weight
-    // aggregate, degree join and every iteration's edges⋈ranks join
-    // are all src-keyed — one shuffle total for the edge frame
-    val e0 = edges.repartition(col(srcCol))
+    // src-keyed from the first exchange: the weight-sum and every
+    // iteration's edges⋈ranks join are src-keyed — one shuffle of the
+    // edge frame
+    val e = Lineage.truncate(edges.repartition(col(srcCol))
       .groupBy(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .agg(sum(col(weightCol).cast("double")).as("w"))
-    val withDeg = Lineage.truncate(e0
-      .join(e0.groupBy(col("src")).agg(sum(col("w")).as("out_w"), min(col("w")).as("min_w")), "src"))
-    val nodes = Lineage.truncate(withDeg.select(col("src").as("id"))
-      .union(withDeg.select(col("dst").as("id"))).distinct())
-    val deg = withDeg.groupBy(col("src"))
-      .agg(first(col("out_w")).as("out_w"), first(col("min_w")).as("min_w"))
-    val checkRow = nodes.join(deg, nodes("id") === deg("src"), "left")
-      .agg(count(lit(1)), count(when(col("src").isNull, 1)),
+      .agg(sum(col(weightCol).cast("double")).as("w")))
+    // per-node facts at node grain, one groupBy over both endpoints:
+    // out_w/min_w NULL = no out-edge
+    val nodes = Lineage.truncate(
+      e.select(col("src").as("id"), col("w"))
+        .union(e.select(col("dst").as("id"), lit(null).cast("double").as("w")))
+        .groupBy(col("id")).agg(sum(col("w")).as("out_w"), min(col("w")).as("min_w")))
+    val checkRow = nodes
+      .agg(count(lit(1)), count(when(col("out_w").isNull, 1)),
         min(col("min_w")), min(col("out_w"))).head()
     val (nl, dangling) = (checkRow.getLong(0), checkRow.getLong(1))
     require(dangling == 0L,
@@ -771,18 +776,20 @@ object Graphs {
     val n = nl.toDouble
     var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
     for (i <- 1 to iters) {
-      val contribs = withDeg.join(ranks, withDeg("src") === ranks("id"))
+      // rank·w/out_w per EDGE, in that order: (rank/out_w)·w per node
+      // rounds differently and can reorder ties downstream
+      val srcRanks = ranks.join(nodes, "id")
+        .select(col("id").as("src"), col("rank"), col("out_w"))
+      val contribs = e.join(srcRanks, "src")
         .select(col("dst").as("id"), (col("rank") * col("w") / col("out_w")).as("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("inflow"))
-      ranks = nodes.join(contribs, Seq("id"), "left")
+      ranks = nextRound(ranks, nodes.join(contribs, Seq("id"), "left")
         .select(col("id"),
           (lit((1.0 - damping) / n) + lit(damping) * coalesce(col("inflow"), lit(0.0)))
-            .as("rank"))
-      // exact-stats leaf per round — see pageRankOn's loop note
-      ranks = Lineage.truncate(ranks)
+            .as("rank")))
     }
     DatasetBridge.release(nodes)
-    DatasetBridge.release(withDeg)
+    DatasetBridge.release(e)
     ranks
   }
 

@@ -287,23 +287,14 @@ object Relational {
     }
 
   /** [[purchaseBase]] symmetrized to the undirected (src,dst) edge
-    * list — its own leaf: four consumers read exactly this shape, and
-    * the explode doubles the frame so cutting it once beats four
-    * re-derivations. Symmetrization stays a ONE-pass explode (a
-    * self-union would run the base scan once per leg). */
-  private def purchaseEdgesSym(s: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.memoize(s, s"purchase_edges_sym:$dir")(
-      purchaseBase(s, dir).select(explode(array(
-          struct(col("c").as("src"), col("sp").as("dst")),
-          struct(col("sp").as("src"), col("c").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst")))
-
-  /** [[purchaseEdgesSym]] DEDUPED — the shape every BFS/rank-family
-    * operator reduces its input to internally (they all `.distinct()`
-    * defensively, result-identically). Cutting the deduped frame to
-    * its own leaf means those internal distincts re-shuffle ~0.2M
-    * deduped rows instead of the 1.2M-row raw symmetrized frame, once
-    * per consumer — seven queries read this leaf. */
+    * list and DEDUPED — the shape every BFS/rank-family operator
+    * reduces its input to internally (they all `.distinct()`
+    * defensively, result-identically). The purchase graph's one
+    * edge-scale leaf besides the base: 1,173,964 distinct of 1,200,000
+    * symmetrized rows at perfbench sf0.1, read by the pageRank family
+    * and the BFS/walk/degree queries. Symmetrization is a ONE-pass
+    * explode (a self-union would scan the base once per leg) inside
+    * this leaf's build: nothing else reads the raw symmetrized frame. */
   private def purchaseEdgesSymD(s: SparkSession, dir: String): DataFrame =
     graft.core.SharedFrames.memoize(s, s"purchase_edges_symd:$dir")(
       // src-keyed at the configured shuffle width: the BFS/rank family
@@ -312,26 +303,24 @@ object Relational {
       // dedup's exchange is the LAST time these edges move; width
       // replaces the byte-coalesced ~10 partitions AQE picked (the
       // whole graph family ran 10-wide on a 32-core box)
-      purchaseEdgesSym(s, dir)
+      purchaseBase(s, dir).select(explode(array(
+          struct(col("c").as("src"), col("sp").as("dst")),
+          struct(col("sp").as("src"), col("c").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"))
         .repartition(col("src"))
         .dropDuplicates()
         .sortWithinPartitions("src"))
 
-  /** The pageRank family's prepared frames (Graphs.degreeGraphFrames
-    * shapes) as session leaves: `(src, dst, out_deg)` and the node
-    * universe. Global + personalized PageRank consume these directly
-    * (Graphs.pageRankOn / personalizedPageRankOn) instead of each
-    * re-running the distinct+degree shuffles per query. On the
-    * SYMMETRIC purchase graph the src set IS the node universe. */
-  private def purchaseDeg(s: SparkSession, dir: String): DataFrame =
-    graft.core.SharedFrames.memoize(s, s"purchase_deg:$dir") {
-      val e0 = purchaseEdgesSymD(s, dir)
-      e0.join(e0.groupBy(col("src")).agg(count(lit(1)).as("out_deg")), "src")
-    }
-
+  /** The purchase graph's node leaf `(id, out_deg)`: |V| rows, one
+    * groupBy over the src-keyed [[purchaseEdgesSymD]] leaf. Global and
+    * personalized PageRank (Graphs.pageRankOn /
+    * personalizedPageRankOn) read it with the edge leaf, so degree is
+    * kept at node grain instead of joined onto every edge. On the
+    * SYMMETRIC purchase graph the src set IS the node universe, so no
+    * out_deg is NULL. */
   private def purchaseNodes(s: SparkSession, dir: String): DataFrame =
     graft.core.SharedFrames.memoize(s, s"purchase_nodes:$dir")(
-      purchaseEdgesSymD(s, dir).select(col("src").as("id")).distinct())
+      purchaseEdgesSymD(s, dir).groupBy(col("src").as("id")).agg(count(lit(1)).as("out_deg")))
 
   /** Distributed PageRank (operators/Graphs) over the customer↔supplier
     * bipartite trade graph (symmetric edges from lineitem⋈orders).
@@ -342,10 +331,10 @@ object Relational {
     * Node ids are parity-encoded LONGS (customer c → 2c, supplier s →
     * 2s+1), not string-prefixed keys: every downstream dedup / join /
     * groupBy then shuffles and hashes 8-byte longs — the string-keyed
-    * variant spent ~2× the time hashing 1.17M concat'd keys. No
-    * distinct here: pageRank dedups its edge input itself. */
+    * variant spent ~2× the time hashing 1.17M concat'd keys. The edge
+    * leaf is already deduped, as pageRankOn requires. */
   def pagerank(s: SparkSession, dir: String): DataFrame = {
-    graft.operators.Graphs.pageRankOn(purchaseDeg(s, dir), purchaseNodes(s, dir), iters = 2)
+    graft.operators.Graphs.pageRankOn(purchaseEdgesSymD(s, dir), purchaseNodes(s, dir), iters = 2)
       .select(col("id"), rd(col("rank"), 10).as("rank"))
       .orderBy("id")
   }
@@ -410,7 +399,7 @@ object Relational {
     val seeds = t(s, dir, "customer").filter(col("c_custkey") <= 5)
       .select((col("c_custkey") * 2).as("id"))
     graft.operators.Graphs.personalizedPageRankOn(
-        purchaseDeg(s, dir), purchaseNodes(s, dir), seeds, "id", iters = 2)
+        purchaseEdgesSymD(s, dir), purchaseNodes(s, dir), seeds, "id", iters = 2)
       .select(col("id"), rd(col("rank"), 10).as("rank"))
       .orderBy("id")
   }

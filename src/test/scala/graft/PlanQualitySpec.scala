@@ -569,4 +569,28 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"),
       s"bitext mining must broadcast the query side:\n$p")
   }
+
+  test("q_pagerank + q_ppr store one edge-scale purchase leaf beyond the base; " +
+    "per-round rank leaves are released") {
+    def stored = spark.sparkContext.getRDDStorageInfo.map(i => i.id -> i.memSize).toMap
+    // the page RDD of a session leaf; a key that is not memoized runs
+    // the throwing builder instead
+    def pagesOf(key: String): Int =
+      graft.core.SharedFrames.memoize(spark, s"$key:$dir")(sys.error(s"no $key leaf"))
+        .queryExecution.analyzed.collectFirst {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.dependencies.head.rdd.id
+        }.get
+    val before = stored.keySet
+    SparkEntry.queries("q_pagerank")(spark, dir).collect()
+    SparkEntry.queries("q_ppr")(spark, dir).collect()
+    val after = stored
+    val Seq(base, symd, nodes) = Seq("purchase_base", "purchase_edges_symd", "purchase_nodes").map(pagesOf)
+    for (gone <- Seq("purchase_deg", "purchase_edges_sym"))
+      intercept[RuntimeException](pagesOf(gone))
+    val beyondV = after.collect { case (id, bytes) if bytes > after(nodes) => id }.toSet -- before
+    assert(beyondV.subsetOf(Set(base, symd)), s"leaves stored beyond |V| rows: $beyondV")
+    // what else the two queries left stored: each one's final rank leaf
+    val left = after.keySet -- before -- Set(base, symd, nodes)
+    assert(left.size <= 2, s"per-round rank leaves still stored: $left")
+  }
 }
