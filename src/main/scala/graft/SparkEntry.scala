@@ -11,8 +11,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - double aggregates rounded at the decimal granularity at which
   *    the exact value is known to live (inputs are 2-decimal), so both
   *    engines round to the same value despite summation-order drift;
-  *  - `events.ts` is ns-precision parquet (Spark truncates to µs, DuckDB
-  *    keeps ns): raw `ts` is never emitted — always date_trunc'd.
+  *  - `events.ts` is TIMESTAMP(MICROS) parquet that Spark reads as
+  *    TIMESTAMP_NTZ and `Tables` casts to TIMESTAMP, while DuckDB keeps
+  *    its own timestamp type: raw `ts` is never emitted — always
+  *    date_trunc'd.
   */
 object SparkEntry {
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,12 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // dev loop: extra args name specific queries to dump (driver passes 2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.ScaleDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false"), shufflePartitions = cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.ScaleDefaults.localSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -80,4 +80,15 @@ object ScaleDefaults {
   /** Apply to a builder (local mains and tests). */
   def apply(b: SparkSession.Builder, shufflePartitions: String): SparkSession.Builder =
     configs(shufflePartitions).foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The local mains' session (Bench, Verify): `local[N]` with N from
+    * `SPARK_GRAFT_CPUS` (32 when unset), one shuffle partition per
+    * core, then `conf` on top, so each pair overrides any setting above. */
+  def localSession(conf: Seq[(String, String)] = Nil): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val b = apply(SparkSession.builder().master(s"local[$cpus]").config("spark.ui.enabled", "false"), cpus)
+    val spark = conf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSet, BindReferences, Predicate, UnsafeProjection, UnsafeRow}
@@ -257,4 +257,10 @@ object DatasetBridge {
     case r: LogicalRDD => r.rdd.dependencies.foreach(_.rdd.unpersist(blocking = true))
     case _ => ()
   }
+
+  /** Block until the listener bus has delivered every event posted so
+    * far, so a listener's counts cover all the work submitted before
+    * the call (the bus is asynchronous and its drain is
+    * `private[spark]`). */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
