@@ -5,13 +5,28 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis functions for large-scale training-data pipelines:
   * tokenization, shingling, quality scoring, language-ID heuristic,
-  * document fingerprinting. All pure Column expressions (codegen'd, no
-  * UDFs) so they run at parquet-scan throughput on any cluster size.
+  * document fingerprinting. All are Column expressions, no UDFs, but
+  * not all are compiled:
+  *  - [[tokens]] and [[shingles]]/[[shinglesMulti]] are compiled
+  *    kernels of `plans.TextExpressions` (`AsciiTokens`, `TokenNGrams`):
+  *    one loop per row in generated code or a plain Scala call;
+  *  - [[stopwordRatio]], [[wsTokenCount]], [[langGuess]],
+  *    [[fingerprint]] and [[chunks]] are built with lambdas (`filter`,
+  *    `transform`). Spark runs every higher-order function as
+  *    `CodegenFallback`, so their lambda bodies are evaluated as
+  *    expression trees per element, not as generated code;
+  *  - the rest are built-in string/regex expressions, compiled.
   *
-  * Functions that consume an array column take the column NAME (they
-  * are built with SQL lambda expressions); materialize the array first
-  * with `withColumn` — that also lets Catalyst reuse the tokenization
-  * across downstream expressions instead of re-tokenizing per use.
+  * Lambda sites outside this file that stay interpreted, candidates for
+  * kernels if they show on a profile: `Collocations.bigrams`, `Bpe`'s
+  * pair unfold and merge `aggregate`, `Curation`'s n-gram md5s,
+  * `Dedup`'s window hashes, candidate pairs and `xxhash64` transforms,
+  * and the repetition bigrams of `queries.TextVector.repetition`.
+  *
+  * Functions that consume an array column take the column NAME;
+  * materialize the array first with `withColumn` — that also lets
+  * Catalyst reuse the tokenization across downstream expressions
+  * instead of re-tokenizing per use.
   */
 object TextAnalysis {
 
@@ -27,29 +42,17 @@ object TextAnalysis {
   def tokensRegex(textCol: String): Column =
     expr(s"regexp_extract_all(lower($textCol), '[a-z0-9]+', 0)")
 
-  /** Word n-gram shingles over a token-array column (1-based element_at).
-    * Guarded: Spark's sequence(1, k) runs DESCENDING for k<1, so an
-    * unguarded short doc would yield inverted garbage instead of []. */
-  def shingles(tokensCol: String, n: Int = 3): Column = {
-    val joined = (0 until n).map(o => s"element_at($tokensCol, i + $o)")
-      .mkString("concat_ws(' ', ", ", ", ")")
-    expr(
-      s"""CASE WHEN size($tokensCol) >= $n
-         | THEN array_distinct(transform(sequence(1, size($tokensCol) - ${n - 1}), i -> $joined))
-         | ELSE array() END""".stripMargin)
-  }
+  /** Distinct word n-gram shingles of a token-array column, in order
+    * of first occurrence; fewer than n tokens (or a NULL array) give [].
+    * The compiled kernel plans.TokenNGrams. */
+  def shingles(tokensCol: String, n: Int = 3): Column =
+    graft.plans.TextExpressions.tokenNGrams(col(tokensCol), n, distinct = true)
 
-  /** [[shingles]] WITH multiplicity (no array_distinct) — for count
-    * vectors where a repeated shingle carries weight (e.g. sparse
-    * cosine over shingle counts). Same short-doc guard. */
-  def shinglesMulti(tokensCol: String, n: Int = 3): Column = {
-    val joined = (0 until n).map(o => s"element_at($tokensCol, i + $o)")
-      .mkString("concat_ws(' ', ", ", ", ")")
-    expr(
-      s"""CASE WHEN size($tokensCol) >= $n
-         | THEN transform(sequence(1, size($tokensCol) - ${n - 1}), i -> $joined)
-         | ELSE array() END""".stripMargin)
-  }
+  /** [[shingles]] WITH multiplicity — for count vectors where a
+    * repeated shingle carries weight (e.g. sparse cosine over shingle
+    * counts). */
+  def shinglesMulti(tokensCol: String, n: Int = 3): Column =
+    graft.plans.TextExpressions.tokenNGrams(col(tokensCol), n, distinct = false)
 
   /** Stopword ratio over tokens (quality signal). */
   def stopwordRatio(tokensCol: String, stopwords: Seq[String] = Seq("the", "a")): Column = {

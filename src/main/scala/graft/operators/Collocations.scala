@@ -23,7 +23,8 @@ import graft.functions.TextAnalysis
 object Collocations {
 
   /** Adjacent-bigram structs (x, y) over a token-array column.
-    * Same guarded-sequence pattern as TextAnalysis.shingles. */
+    * Guarded: Spark's sequence(1, k) runs DESCENDING for k < 1, so an
+    * unguarded one-token doc would index element 0. */
   private def bigrams(tokensCol: String): Column =
     expr(
       s"""CASE WHEN size($tokensCol) >= 2

@@ -27,17 +27,13 @@ import graft.functions.TextAnalysis
   * The feature hash is the md5-prefix bucket (same construction as
   * Dedup.minhashSignatures' base hash) so the DuckDB oracle can mirror
   * it textually: `cast(conv(substr(md5(f),1,15),16,10) as bigint) % B`.
+  * The program computes that same value with the compiled kernel
+  * plans.UniBigramBuckets: the first 8 digest bytes shifted right by 4
+  * are the 15-hex-digit prefix, so no hex string or joined bigram is
+  * built. A document of m tokens has m unigrams and max(m − 1, 0)
+  * bigrams, as the oracle's `CASE WHEN len(w) >= 2`.
   */
 object Dsir {
-
-  /** Hashed unigram+bigram feature array for a token-array column —
-    * multiplicities preserved (DSIR counts, not presence). */
-  private def featureBuckets(toksCol: String, buckets: Int) = expr(
-    s"""transform(
-       |  concat($toksCol,
-       |         transform(sequence(1, size($toksCol) - 1),
-       |                   i -> concat(element_at($toksCol, i), ' ', element_at($toksCol, i + 1)))),
-       |  f -> cast(conv(substr(md5(f), 1, 15), 16, 10) as bigint) % $buckets)""".stripMargin)
 
   /** Importance weights for every `raw` document against a `target`
     * sample. Returns (idCol, n_feats, log_weight) — log_weight rounded
@@ -55,7 +51,8 @@ object Dsir {
     def bucketed(df: DataFrame, cols: Seq[String]): DataFrame = df
       .withColumn("__toks", TextAnalysis.tokens(textCol))
       .filter(size(col("__toks")) > 0)
-      .select(cols.map(col) :+ explode(featureBuckets("__toks", buckets)).as("b"): _*)
+      .select(cols.map(col) :+ explode(
+        graft.plans.TextExpressions.uniBigramBuckets(col("__toks"), buckets)).as("b"): _*)
     // per-(doc, bucket) feature counts, cut to a leaf: the raw corpus
     // is tokenized + hashed ONCE (previously the model agg and the
     // scoring join each re-ran the whole explode chain), and every
@@ -65,18 +62,20 @@ object Dsir {
     // you shuffle / §5 reuse vs recompute)
     val dcnt = graft.core.Lineage.truncate(bucketed(raw, Seq(idCol))
       .groupBy(col(idCol), col("b")).agg(count(lit(1)).as("c")))
-    // B-row smoothed log-frequency models; ratios only ever read buckets
-    // that occur in dcnt, and those are all present in rawCnt by
-    // construction — the left join fills target-absent buckets with the
-    // smoothing floor
-    val rawCnt = dcnt.groupBy(col("b")).agg(sum(col("c")).as("cr"))
-    val tgtCnt = bucketed(target, Seq.empty).groupBy(col("b")).agg(count(lit(1)).as("ct"))
-    val totals = rawCnt.agg(sum(col("cr")).as("nr"))
-      .crossJoin(tgtCnt.agg(sum(col("ct")).as("nt")))
-    val lam = rawCnt.join(tgtCnt, Seq("b"), "left").crossJoin(broadcast(totals))
+    // ONE B-row model frame: raw counts re-aggregated from dcnt and
+    // target counts from one target pass, in one aggregation; the
+    // totals nr/nt are window sums over those ≤ B rows, so each count
+    // runs once. Buckets only the target has (cr = 0) never meet dcnt
+    // in the scoring join; target-absent buckets keep ct = 0, the
+    // smoothing floor.
+    val model = dcnt.select(col("b"), col("c").as("cr"), lit(0L).as("ct"))
+      .unionByName(bucketed(target, Seq.empty).select(col("b"), lit(0L).as("cr"), lit(1L).as("ct")))
+      .groupBy(col("b")).agg(sum(col("cr")).as("cr"), sum(col("ct")).as("ct"))
+    val all = org.apache.spark.sql.expressions.Window.partitionBy()
+    val lam = model
       .select(col("b"),
-        (log((coalesce(col("ct"), lit(0L)) + lit(alpha)) / (col("nt") + lit(alpha * buckets)))
-          - log((col("cr") + lit(alpha)) / (col("nr") + lit(alpha * buckets)))).as("lam"))
+        (log((col("ct") + lit(alpha)) / (sum(col("ct")).over(all) + lit(alpha * buckets)))
+          - log((col("cr") + lit(alpha)) / (sum(col("cr")).over(all) + lit(alpha * buckets)))).as("lam"))
     // Σ_b c·lam ≡ the per-feature Σ lam (the multiplicity fold moves
     // into exact integer c; the only float reordering is within the
     // per-doc sum, ~1e-11 relative — absorbed by the 4-decimal surface

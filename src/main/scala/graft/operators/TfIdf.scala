@@ -142,9 +142,10 @@ object TfIdf {
     * in the pruned vector space.
     *
     * 100 TB shape: one shingle-keyed aggregation bounds every posting
-    * list at maxDf (≤ maxDf·(maxDf−1)/2 pairs per shingle, unfolded in
-    * codegen — no self-join of the exploded frame); norms are one
-    * groupBy(doc). No all-pairs path, no float-sum shuffle.
+    * list at maxDf (≤ maxDf·(maxDf−1)/2 pairs per shingle, unfolded by
+    * the plans.PostingPairs kernel — no self-join of the exploded
+    * frame); norms are one groupBy(doc). No all-pairs path, no
+    * float-sum shuffle.
     * The candidate-count/recall trade is maxDf (raise to catch pairs
     * that only share common shingles). */
   def shingleCosinePairs(docs: DataFrame, idCol: String, textCol: String,
@@ -158,7 +159,7 @@ object TfIdf {
     // ONE groupBy(shingle) builds the df-pruned posting list per
     // shingle (df > maxDf buckets dropped — the all-pairs-similarity
     // pruning lever); the dot products then unfold as the posting
-    // array's UPPER TRIANGLE in codegen (sort_array orders by id, so
+    // array's UPPER TRIANGLE in one kernel (sort_array orders by id, so
     // id_a < id_b by construction). vs the previous gid self-join
     // shape: one exchange of the (doc, shingle, c) frame instead of
     // three (df agg + two join legs), half the generated pair rows
@@ -180,10 +181,7 @@ object TfIdf {
       .agg(sum(col("e.c") * col("e.c")).as("n2"))
     buckets
       .filter(size(col("ps")) >= 2)
-      .select(explode(expr(
-        """flatten(transform(ps, (x, i) ->
-          |  transform(slice(ps, i + 2, size(ps)), y ->
-          |    struct(x.id AS id_a, y.id AS id_b, x.c * y.c AS p))))""".stripMargin)).as("pr"))
+      .select(explode(graft.plans.TextExpressions.postingPairs(col("ps"))).as("pr"))
       .groupBy(col("pr.id_a").as("id_a"), col("pr.id_b").as("id_b"))
       .agg(sum(col("pr.p")).as("dot"))
       .join(norms.select(col(idCol).as("id_a"), col("n2").as("__na2")), "id_a")

@@ -360,6 +360,36 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), "dsir lam model must broadcast-join the feature stream")
   }
 
+  test("q_dsir/q_shingle_cosine: no plan they optimize holds a lambda (HigherOrderFunction)") {
+    // `transform` and its kin are CodegenFallback: their lambda bodies
+    // run as interpreted expression trees per element. A probe rule in
+    // the optimizer sees every plan optimized while the query is built
+    // (the leaves it cuts) and planned, not only the final one.
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    var plans = 0
+    object Probe extends Rule[LogicalPlan] {
+      def apply(p: LogicalPlan): LogicalPlan = {
+        plans += 1
+        p.foreach(_.expressions.foreach(_.foreach {
+          case h: HigherOrderFunction => seen += h.prettyName
+          case _ =>
+        }))
+        p
+      }
+    }
+    val before = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = before :+ Probe
+    try Seq("q_dsir", "q_shingle_cosine").foreach { q =>
+      plans = 0
+      SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
+      assert(plans > 0, s"$q: the probe saw no plan")
+      assert(seen.isEmpty, s"$q optimizes lambdas: ${seen.distinct.mkString(", ")}")
+    } finally spark.experimental.extraOptimizations = before
+  }
+
   test("q_blocking_eval: truth discovery and banding are equi-joins, metrics sides broadcast") {
     val p = plan("q_blocking_eval")
     assert(!p.contains("CartesianProduct"), "blocking audit must never go all-pairs")

@@ -38,6 +38,32 @@ class SelectionSpec extends AnyFunSuite {
     assert(nf.values.forall(_ == 9L), s"expected 9 features per 5-token doc: $nf")
   }
 
+  test("dsir: a one-token document has its unigram alone (n_feats 1) and a hand-computed weight") {
+    // raw: doc 0 = "alpha" (one token), doc 1 = "alpha beta";
+    // target: "beta". Buckets by the oracle's textual hash.
+    def bucket(f: String): Long = {
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(f.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      java.lang.Long.parseLong(hex.substring(0, 15), 16) % 64
+    }
+    val rawFeats = Seq(0L -> "alpha", 1L -> "alpha", 1L -> "beta", 1L -> "alpha beta")
+    val tgtFeats = Seq("beta")
+    val cr = rawFeats.groupBy(f => bucket(f._2)).map { case (b, fs) => b -> fs.size }
+    val ct = tgtFeats.groupBy(bucket).map { case (b, fs) => b -> fs.size }
+    def lam(b: Long): Double =
+      math.log((ct.getOrElse(b, 0) + 1.0) / (tgtFeats.size + 64.0)) -
+        math.log((cr(b) + 1.0) / (rawFeats.size + 64.0))
+    val raw = Seq((0L, "alpha"), (1L, "alpha beta")).toDF("doc_id", "text")
+    val w = Dsir.importanceWeights(raw, Seq("beta").toDF("text"), "doc_id", "text")
+      .as[(Long, Long, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(w(0L)._1 == 1L && w(1L)._1 == 3L, s"n_feats: $w")
+    val want0 = lam(bucket("alpha"))
+    val want1 = Seq("alpha", "beta", "alpha beta").map(f => lam(bucket(f))).sum
+    // log_weight is rounded to 4 decimals at the surface
+    assert(math.abs(w(0L)._2 - want0) <= 0.5e-4 + 1e-12, s"doc 0: ${w(0L)._2} vs $want0")
+    assert(math.abs(w(1L)._2 - want1) <= 0.5e-4 + 1e-12, s"doc 1: ${w(1L)._2} vs $want1")
+  }
+
   test("dsir: rejects non-positive smoothing") {
     intercept[IllegalArgumentException] {
       Dsir.importanceWeights(dsirDocs, dsirDocs, "doc_id", "text", alpha = 0.0)
